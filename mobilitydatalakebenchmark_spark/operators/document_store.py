@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..schemas import DOCUMENT_SCHEMA
+
 
 class DocumentParquetStore:
     """S9: one nested document per row, keyed by timestamp."""
@@ -34,7 +36,11 @@ class DocumentParquetStore:
 
     def get_document(self, spark: SparkSession, timestamp: str) -> DataFrame:
         # timestamp equality prunes parquet row groups via min/max stats
-        return spark.read.parquet(self.path).filter(F.col("timestamp") == timestamp)
+        return (
+            spark.read.schema(DOCUMENT_SCHEMA)
+            .parquet(self.path)
+            .filter(F.col("timestamp") == timestamp)
+        )
 
     def total_size(self) -> int:
         from ..sources.size import dir_size
@@ -55,8 +61,6 @@ class GzipJsonStore:
         df.write.mode(mode).option("compression", "gzip").json(self.path)
 
     def get_document(self, spark: SparkSession, timestamp: str) -> DataFrame:
-        from ..schemas import DOCUMENT_SCHEMA
-
         return (
             spark.read.schema(DOCUMENT_SCHEMA)
             .json(self.path)

@@ -29,7 +29,12 @@ from ..functions.codecs import (
     ts_bucket,
     unpack_le_bytes,
 )
-from ..schemas import TS_BUCKET_COL
+from ..schemas import (
+    TS_BUCKET_COL,
+    VELOCITY_SPLIT_DOC_SCHEMA,
+    VELOCITY_SPLIT_OBS_SCHEMA,
+    cantor_schema,
+)
 from .flat_store import explode_features, renest_documents
 
 
@@ -67,7 +72,7 @@ class CantorParquetStore:
         )
 
     def scan_decoded(self, spark: SparkSession) -> DataFrame:
-        df = spark.read.parquet(self.path)
+        df = spark.read.schema(cantor_schema(self.packed)).parquet(self.path)
         z = (
             unpack_le_bytes(F.col("coords_paired"))
             if self.packed
@@ -132,10 +137,12 @@ class VelocitySplitParquetStore:
         obs.write.mode(mode).partitionBy(TS_BUCKET_COL).parquet(self._p("obs"))
 
     def get_document(self, spark: SparkSession, timestamp: str) -> DataFrame:
-        zone = spark.read.parquet(self._p("doc")).filter(
-            F.col("timestamp") == timestamp
+        zone = (
+            spark.read.schema(VELOCITY_SPLIT_DOC_SCHEMA)
+            .parquet(self._p("doc"))
+            .filter(F.col("timestamp") == timestamp)
         )
-        obs = spark.read.parquet(self._p("obs")).filter(
+        obs = spark.read.schema(VELOCITY_SPLIT_OBS_SCHEMA).parquet(self._p("obs")).filter(
             (F.col(TS_BUCKET_COL) == timestamp[: self.bucket_len])
             & (F.col("timestamp") == timestamp)
         )

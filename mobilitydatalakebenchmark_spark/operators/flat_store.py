@@ -18,11 +18,11 @@ aggregates only the rows of the requested snapshot(s).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.codecs import decode_direction, encode_direction, ts_bucket
-from ..schemas import TS_BUCKET_COL
+from ..schemas import FLAT_STORE_SCHEMA, TS_BUCKET_COL
 
 
 def explode_features(documents: DataFrame) -> DataFrame:
@@ -76,6 +76,13 @@ def feature_struct(prefix: str = "") -> Column:
     )
 
 
+def feature_collection(features: Column) -> Column:
+    """The ``data`` column: a GeoJSON FeatureCollection around ``features``."""
+    return F.struct(
+        F.lit("FeatureCollection").alias("type"), features.alias("features")
+    ).alias("data")
+
+
 def renest_documents(flat: DataFrame) -> DataFrame:
     """P3: flat observations -> (timestamp, data) FeatureCollection rows.
     Feature order within a document is unspecified in the reference
@@ -83,13 +90,7 @@ def renest_documents(flat: DataFrame) -> DataFrame:
     return (
         flat.groupBy("timestamp")
         .agg(F.sort_array(F.collect_list(feature_struct())).alias("_features"))
-        .select(
-            "timestamp",
-            F.struct(
-                F.lit("FeatureCollection").alias("type"),
-                F.col("_features").alias("features"),
-            ).alias("data"),
-        )
+        .select("timestamp", feature_collection(F.col("_features")))
     )
 
 
@@ -131,8 +132,7 @@ class FlatParquetStore:
         )
 
     def scan(self) -> DataFrame:
-        spark = _active_session()
-        return spark.read.parquet(self.path)
+        return SparkSession.active().read.schema(FLAT_STORE_SCHEMA).parquet(self.path)
 
     def get_document(self, timestamp: str) -> DataFrame:
         """Point lookup: ts_bucket partition pruning happens automatically
@@ -148,11 +148,3 @@ class FlatParquetStore:
 
         return dir_size(self.path)
 
-
-def _active_session():
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError("no active SparkSession")
-    return spark

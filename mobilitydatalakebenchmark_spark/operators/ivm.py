@@ -36,8 +36,13 @@ any interleaving of appends and deletes is pinned by test.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from .maintenance import count_data_files, exists
 
 _BUCKETS = 32
 _BUCKET_COL = "_key_bucket"
@@ -78,41 +83,23 @@ class MaterializedJoin:
         )
 
     def _read(self, spark: SparkSession, table: str) -> DataFrame:
-        try:
-            return spark.read.parquet(f"{self.path}/{table}.parquet")
-        except Exception as exc:
-            # an EMPTY base/view write leaves no part files to infer a
-            # schema from (zero write tasks): fall back to the schemas
-            # persisted at build time — the store stays readable instead
-            # of crashing on degenerate input (degenerate sweep, r11).
-            # Typed error-class check (r11 ADVICE): an unrelated
-            # AnalysisException must re-raise, never retry.
-            from ..errors import is_schema_inference_error
-
-            if not is_schema_inference_error(exc):
-                raise
-            import json as _json
-
-            from pyspark.sql.types import StructType
-
-            row = spark.read.parquet(f"{self.path}/schemas.parquet").first()
-            schema = StructType.fromJson(_json.loads(row[f"{table}_schema"]))
-            return spark.read.schema(schema).parquet(
-                f"{self.path}/{table}.parquet"
-            )
+        path = f"{self.path}/{table}.parquet"
+        if count_data_files(path):
+            return spark.read.parquet(path)
+        # an EMPTY base/view write leaves no part files to infer a schema
+        # from (zero write tasks): declare the schema persisted at build
+        # time, so the store stays readable on degenerate input
+        row = spark.read.parquet(f"{self.path}/schemas.parquet").first()
+        schema = StructType.fromJson(json.loads(row[f"{table}_schema"]))
+        return spark.read.schema(schema).parquet(path)
 
     def _row_id(self, side: str) -> str | None:
         return self.left_row_id if side == "left" else self.right_row_id
 
     def _tombstones(self, spark: SparkSession, side: str) -> DataFrame | None:
-        try:
-            return spark.read.parquet(f"{self.path}/{side}_tombstones.parquet")
-        except Exception as exc:  # narrow: no deletes yet
-            from ..errors import is_missing_store_error
-
-            if not is_missing_store_error(exc):
-                raise
-            return None
+        """The side's tombstone ids, or None before its first delete."""
+        path = f"{self.path}/{side}_tombstones.parquet"
+        return spark.read.parquet(path) if exists(spark, path) else None
 
     def _live(self, spark: SparkSession, side: str) -> DataFrame:
         """The side's base minus its tombstoned rows — what every join

@@ -29,6 +29,24 @@ def _hadoop_fs(spark: SparkSession):
     return jvm, jvm.org.apache.hadoop.fs.FileSystem.get(conf)
 
 
+def exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists: the one "nothing stored yet" check. Reads
+    declare their schema, so an existing directory with no part files
+    reads as an empty frame and only a missing path needs telling apart."""
+    jvm, fs = _hadoop_fs(spark)
+    return fs.exists(jvm.org.apache.hadoop.fs.Path(path))
+
+
+def replace_dir(spark: SparkSession, tmp: str, dst: str) -> None:
+    """Swap a fully written ``tmp`` directory into ``dst``: delete, then
+    rename (Hadoop FileSystem API, so local FS and HDFS alike). Not
+    crash-safe: a crash between the two steps leaves only ``tmp``."""
+    jvm, fs = _hadoop_fs(spark)
+    path = jvm.org.apache.hadoop.fs.Path(dst)
+    fs.delete(path, True)
+    fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), path)
+
+
 def compact_partitions(
     spark: SparkSession,
     path: str,
@@ -40,9 +58,8 @@ def compact_partitions(
 
     Per-partition output file count = ceil(partition_bytes / target); the
     rewrite repartitions by (partition_col, uniform salt) so each output
-    task writes one file of its own partition. Swap is
-    write-temp -> delete -> rename (same barrier pattern as
-    TemporalStore.append_batch).
+    task writes one file of its own partition. The rewrite lands in a
+    sibling directory first and is swapped in by ``replace_dir``.
 
     ``zorder=(x_col, y_col, x_range, y_range)`` additionally clusters
     every rewritten file by the 2-D Morton key (the Delta
@@ -57,7 +74,7 @@ def compact_partitions(
     per_partition = max(total_bytes // n_parts, 1)
     files_per_partition = max(1, math.ceil(per_partition / target_file_bytes))
 
-    before_files = _count_data_files(spark, path)
+    before_files = count_data_files(path)
     tmp = path + "__compacting"
     if zorder is not None:
         # OPTIMIZE ... ZORDER BY semantics: RANGE-partition on the Morton
@@ -87,18 +104,16 @@ def compact_partitions(
             ),
         )
     out.write.mode("overwrite").partitionBy(partition_col).parquet(tmp)
-    jvm, fs = _hadoop_fs(spark)
-    dst = jvm.org.apache.hadoop.fs.Path(path)
-    fs.delete(dst, True)
-    fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), dst)
+    replace_dir(spark, tmp, path)
     return {
         "files_before": before_files,
-        "files_after": _count_data_files(spark, path),
+        "files_after": count_data_files(path),
         "partitions": n_parts,
     }
 
 
-def _count_data_files(spark: SparkSession, path: str) -> int:
+def count_data_files(path: str) -> int:
+    """Parquet part files under ``path`` (0 when it is missing)."""
     import os
 
     n = 0

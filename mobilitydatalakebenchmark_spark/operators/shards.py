@@ -32,8 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-from ..errors import is_missing_store_error
+from .maintenance import exists
 
 
 def _content_md5(id_col: str):
@@ -167,7 +166,8 @@ def append_shards(
     spark = docs.sparkSession
     from .text_analysis import pack_sequences
 
-    try:
+    manifest, prev = None, None
+    if exists(spark, f"{path}/manifest.parquet"):
         manifest = spark.read.parquet(f"{path}/manifest.parquet")
         # fill level keyed under the CALLER's source_col (the manifest
         # stores the canonical 'source') so the placement join below
@@ -175,10 +175,6 @@ def append_shards(
         prev = manifest.groupBy(
             F.col("source").alias(source_col)
         ).agg(F.sum("n_tokens").alias("_prev_tokens"))
-    except Exception as exc:  # narrow: only "empty store" shapes
-        if not is_missing_store_error(exc):
-            raise
-        manifest, prev = None, None
     placed = pack_sequences(
         docs,
         capacity=shard_tokens,
@@ -257,12 +253,9 @@ def repair_manifest(
     write-ahead artifact, so recomputing from it is always correct; the
     streaming sink calls this on replay whenever it detects the batch
     was (partially) already written."""
-    try:
-        data = spark.read.parquet(f"{path}/data.parquet")
-    except Exception as exc:  # nothing written yet -> nothing to repair
-        if not is_missing_store_error(exc):
-            raise
-        return
+    if not exists(spark, f"{path}/data.parquet"):
+        return  # nothing written yet -> nothing to repair
+    data = spark.read.parquet(f"{path}/data.parquet")
     if ids is not None:
         touched = (
             data.join(
@@ -278,15 +271,13 @@ def repair_manifest(
         source_col,
         id_col,
     )
-    try:
-        manifest = spark.read.parquet(f"{path}/manifest.parquet")
-        new_manifest = manifest.join(
-            F.broadcast(touched), "shard", "left_anti"
-        ).unionByName(recomputed)
-    except Exception as exc:
-        if not is_missing_store_error(exc):
-            raise
-        new_manifest = recomputed
+    new_manifest = recomputed
+    if exists(spark, f"{path}/manifest.parquet"):
+        new_manifest = (
+            spark.read.parquet(f"{path}/manifest.parquet")
+            .join(F.broadcast(touched), "shard", "left_anti")
+            .unionByName(recomputed)
+        )
     _write_manifest(spark, new_manifest, path)
 
 

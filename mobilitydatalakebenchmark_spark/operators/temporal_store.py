@@ -27,7 +27,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.codecs import decode_direction
-from .flat_store import explode_features
+from ..schemas import TEMPORAL_SCHEMA
+from .flat_store import explode_features, feature_collection
+from .maintenance import replace_dir
 
 _MEASURES = {
     # temporal column -> (source column, value cast)
@@ -106,7 +108,7 @@ class TemporalStore:
         build_temporal(documents).write.mode(mode).parquet(self.path)
 
     def scan(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.path)
+        return spark.read.schema(TEMPORAL_SCHEMA).parquet(self.path)
 
     def append_batch(self, spark: SparkSession, documents: DataFrame) -> None:
         """W4/J9: instant append, pure-recompute flavor — merge stored
@@ -130,18 +132,12 @@ class TemporalStore:
             F.min_by("direction", "timerange.start").alias("direction"),
             F.min_by("lineId", "timerange.start").alias("lineId"),
         )
-        # Safe self-overwrite: materialize to a sibling path first (persist()
+        # Self-overwrite: materialize to a sibling path first (persist()
         # is NOT a reliability barrier — an evicted cached partition would
-        # recompute against files the overwrite already deleted), then swap
-        # via the Hadoop FileSystem API (works on local FS and HDFS alike).
+        # recompute against files the overwrite already deleted), then swap.
         tmp_path = self.path + "__pending"
         merged.write.mode("overwrite").parquet(tmp_path)
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(conf)
-        dst = jvm.org.apache.hadoop.fs.Path(self.path)
-        fs.delete(dst, True)
-        fs.rename(jvm.org.apache.hadoop.fs.Path(tmp_path), dst)
+        replace_dir(spark, tmp_path, self.path)
 
     def total_size(self) -> int:
         from ..sources.size import dir_size
@@ -184,11 +180,5 @@ class TemporalStore:
             hit.select(feature.alias("f"))
             .groupBy(F.lit(timestamp).alias("timestamp"))
             .agg(F.sort_array(F.collect_list("f")).alias("_features"))
-            .select(
-                "timestamp",
-                F.struct(
-                    F.lit("FeatureCollection").alias("type"),
-                    F.col("_features").alias("features"),
-                ).alias("data"),
-            )
+            .select("timestamp", feature_collection(F.col("_features")))
         )

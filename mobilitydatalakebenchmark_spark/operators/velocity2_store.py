@@ -20,8 +20,20 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.codecs import ts_bucket
-from ..schemas import TS_BUCKET_COL
-from .flat_store import explode_features, feature_struct
+from ..schemas import (
+    TS_BUCKET_COL,
+    VELOCITY2_BUS_SCHEMA,
+    VELOCITY2_OBS_SCHEMA,
+    VELOCITY2_VEHICLE_SCHEMA,
+)
+from .flat_store import explode_features, renest_documents
+from .maintenance import exists
+
+_SCHEMAS = {
+    "bus": VELOCITY2_BUS_SCHEMA,
+    "vehicle": VELOCITY2_VEHICLE_SCHEMA,
+    "obs": VELOCITY2_OBS_SCHEMA,
+}
 
 
 def build_velocity2_tables(
@@ -71,47 +83,30 @@ class Velocity2ParquetStore:
     def _p(self, table: str) -> str:
         return f"{self.path}/{table}"
 
+    def _read(self, spark: SparkSession, table: str) -> DataFrame:
+        return spark.read.schema(_SCHEMAS[table]).parquet(self._p(table))
+
     def write(self, documents: DataFrame, mode: str = "overwrite") -> None:
         bus, vehicle, obs = build_velocity2_tables(documents)
-        if mode == "append":
-            spark = documents.sparkSession
-            # J7/J8: novelty anti-joins per dim level
-            for name, df_new, key in (("bus", bus, "bus_id"), ("vehicle", vehicle, "vehicle_id")):
-                try:
-                    existing = spark.read.parquet(self._p(name)).select(key)
-                    df_new = df_new.join(existing, key, "left_anti")
-                except Exception as exc:  # first batch only — a corrupt
-                    # store must fail loudly, not be silently re-seeded
-                    from ..errors import is_missing_store_error
-
-                    if not is_missing_store_error(exc):
-                        raise
-                df_new.write.mode(mode).parquet(self._p(name))
-        else:
-            bus.write.mode(mode).parquet(self._p("bus"))
-            vehicle.write.mode(mode).parquet(self._p("vehicle"))
+        spark = documents.sparkSession
+        for name, df_new, key in (("bus", bus, "bus_id"), ("vehicle", vehicle, "vehicle_id")):
+            if mode == "append" and exists(spark, self._p(name)):
+                # J7/J8: novelty anti-join per dim level
+                stored = self._read(spark, name).select(key)
+                df_new = df_new.join(stored, key, "left_anti")
+            df_new.write.mode(mode).parquet(self._p(name))
         obs.write.mode(mode).partitionBy(TS_BUCKET_COL).parquet(self._p("obs"))
 
     def get_document(self, spark: SparkSession, timestamp: str) -> DataFrame:
-        bus = spark.read.parquet(self._p("bus"))
-        vehicle = spark.read.parquet(self._p("vehicle"))
-        obs = spark.read.parquet(self._p("obs")).filter(
+        obs = self._read(spark, "obs").filter(
             (F.col(TS_BUCKET_COL) == timestamp[:13]) & (F.col("timestamp") == timestamp)
         )
         flat = (
-            obs.join(F.broadcast(vehicle), "vehicle_id")
-            .join(F.broadcast(bus), "bus_id")
+            obs.join(F.broadcast(self._read(spark, "vehicle")), "vehicle_id")
+            .join(F.broadcast(self._read(spark, "bus")), "bus_id")
             .withColumn("id", F.col("vid"))
         )
-        return flat.groupBy("timestamp").agg(
-            F.sort_array(F.collect_list(feature_struct())).alias("_features")
-        ).select(
-            "timestamp",
-            F.struct(
-                F.lit("FeatureCollection").alias("type"),
-                F.col("_features").alias("features"),
-            ).alias("data"),
-        )
+        return renest_documents(flat)
 
     def total_size(self) -> int:
         from ..sources.size import dir_size

@@ -27,8 +27,20 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..functions.codecs import ts_bucket
-from ..schemas import TS_BUCKET_COL
-from .flat_store import explode_features, feature_struct
+from ..schemas import (
+    TS_BUCKET_COL,
+    VELOCITY_L1_SCHEMA,
+    VELOCITY_L2_SCHEMA,
+    VELOCITY_MAIN_SCHEMA,
+)
+from .flat_store import explode_features, feature_collection, renest_documents
+from .maintenance import exists
+
+_SCHEMAS = {
+    "main": VELOCITY_MAIN_SCHEMA,
+    "l1": VELOCITY_L1_SCHEMA,
+    "l2": VELOCITY_L2_SCHEMA,
+}
 
 
 def _l1_key() -> F.Column:
@@ -95,32 +107,22 @@ class VelocityParquetStore:
     def _p(self, table: str) -> str:
         return f"{self.path}/{table}"
 
+    def _read(self, spark: SparkSession, table: str) -> DataFrame:
+        return spark.read.schema(_SCHEMAS[table]).parquet(self._p(table))
+
     def write(self, documents: DataFrame, mode: str = "overwrite") -> None:
         main, l1, l2 = build_velocity_tables(documents)
-        if mode == "append":
+        spark = documents.sparkSession
+        if mode == "append" and exists(spark, self._p("l1")):
             # J7/J8/F4: only novel dim rows are appended (existence probe
             # as left-anti join against the stored dim)
-            spark = documents.sparkSession
-            try:
-                existing = spark.read.parquet(self._p("l1")).select("l1_id")
-                l1 = l1.join(existing, "l1_id", "left_anti")
-            except Exception as exc:  # first batch: nothing stored yet —
-                # but ONLY that shape; a genuinely corrupt store (schema
-                # drift, permissions) must fail loudly, not be overwritten
-                from ..errors import is_missing_store_error
-
-                if not is_missing_store_error(exc):
-                    raise
+            l1 = l1.join(self._read(spark, "l1").select("l1_id"), "l1_id", "left_anti")
         main.write.mode(mode).parquet(self._p("main"))
         l1.write.mode(mode).parquet(self._p("l1"))
         l2.write.mode(mode).partitionBy(TS_BUCKET_COL).parquet(self._p("l2"))
 
     def tables(self, spark: SparkSession) -> tuple[DataFrame, DataFrame, DataFrame]:
-        return (
-            spark.read.parquet(self._p("main")),
-            spark.read.parquet(self._p("l1")),
-            spark.read.parquet(self._p("l2")),
-        )
+        return tuple(self._read(spark, table) for table in ("main", "l1", "l2"))
 
     def get_document(self, spark: SparkSession, timestamp: str) -> DataFrame:
         """J6: main ⨝ l2 ⨝ l1 reconstruction
@@ -134,22 +136,11 @@ class VelocityParquetStore:
             .join(F.broadcast(l1), "l1_id")
             .withColumn("id", F.col("vid"))
         )
-        features = obs.groupBy("timestamp").agg(
-            F.sort_array(F.collect_list(feature_struct())).alias("_features")
-        )
+        docs = renest_documents(obs)
+        empty = F.array().cast(docs.schema["data"].dataType["features"].dataType)
         # empty snapshots exist in main but have no l2 rows -> left join
-        return (
-            main_hit.join(features, "timestamp", "left")
-            .select(
-                "timestamp",
-                F.struct(
-                    F.lit("FeatureCollection").alias("type"),
-                    F.coalesce(
-                        F.col("_features"),
-                        F.array().cast(features.schema["_features"].dataType),
-                    ).alias("features"),
-                ).alias("data"),
-            )
+        return main_hit.join(docs, "timestamp", "left").select(
+            "timestamp", feature_collection(F.coalesce(F.col("data.features"), empty))
         )
 
     def total_size(self) -> int:

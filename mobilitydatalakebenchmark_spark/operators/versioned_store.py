@@ -25,9 +25,11 @@ ingest model). Delta's MERGE/optimistic locking remain the gated path.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class VersionedParquetStore:
@@ -180,8 +182,6 @@ class VersionedParquetStore:
         if partition_by:
             # partitionBy moves the partition columns last in the laid-
             # out schema; declare the read schema in that order
-            from pyspark.sql.types import StructType
-
             fields = [f for f in written_schema.fields
                       if f.name not in partition_by]
             fields += [written_schema[p] for p in partition_by]
@@ -236,25 +236,11 @@ class VersionedParquetStore:
             reader = spark.read
             if merge_schema:
                 reader = reader.option("mergeSchema", "true")
-            try:
-                parts.append(reader.parquet(d))
-            except Exception as exc:
-                # a dir from an EMPTY commit has no part files to infer
-                # from: declare the schema its manifest recorded (typed
-                # error-class check — r11 ADVICE; see ..errors)
-                from ..errors import is_schema_inference_error
-
-                if schema_json is None or not is_schema_inference_error(exc):
-                    raise
-                import json as _json
-
-                from pyspark.sql.types import StructType
-
-                parts.append(
-                    reader.schema(
-                        StructType.fromJson(_json.loads(schema_json))
-                    ).parquet(d)
-                )
+            if schema_json is not None:
+                # declare the schema the manifest recorded: no footer
+                # read, and a dir from an EMPTY commit reads as empty
+                reader = reader.schema(StructType.fromJson(json.loads(schema_json)))
+            parts.append(reader.parquet(d))
         out = parts[0]
         for nxt in parts[1:]:
             out = out.unionByName(nxt, allowMissingColumns=merge_schema)

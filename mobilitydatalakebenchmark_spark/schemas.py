@@ -89,41 +89,115 @@ FLAT_SCHEMA = T.StructType(
 TS_BUCKET_COL = "ts_bucket"
 TS_BUCKET_LEN = 13  # "YYYY-MM-DDTHH"
 
+
+def _partitioned(schema: T.StructType) -> T.StructType:
+    """Read schema of a table written with ``partitionBy(ts_bucket)``: the
+    partition column is declared as a string and reads back last."""
+    return T.StructType(schema.fields + [T.StructField(TS_BUCKET_COL, T.StringType())])
+
+
+def _flat_fields(*names: str) -> list[T.StructField]:
+    return [FLAT_SCHEMA[name] for name in names]
+
+
+_OBSERVATION_FIELDS = (
+    "distance", "pointId", "distanceFromPoint", "coordinates_0", "coordinates_1"
+)
+
+# The flat store and the streaming ingester's table.
+FLAT_STORE_SCHEMA = _partitioned(FLAT_SCHEMA)
+
 # ---------------------------------------------------------------------------
 # A.3 Normalized (velocity) star — 3 tables
 # per ``apache_parquet_velocity.py:13-37`` / ``postgresql_velocity.py:19-39``.
-# main: one row per snapshot; l1: one row per distinct vehicle (first-seen);
-# l2: one row per observation referencing both.
+# main: one row per snapshot; l1: one row per distinct vehicle (first-seen),
+# keyed by md5(uuid); l2: one row per observation referencing l1.
 # ---------------------------------------------------------------------------
 
 VELOCITY_MAIN_SCHEMA = T.StructType(
     [
-        T.StructField("id", T.LongType(), False),  # surrogate doc id
         T.StructField("timestamp", T.StringType(), False),
+        T.StructField(TS_BUCKET_COL, T.StringType()),
     ]
 )
 
 VELOCITY_L1_SCHEMA = T.StructType(
     [
-        T.StructField("id", T.LongType(), False),  # surrogate vehicle id
+        T.StructField("l1_id", T.StringType()),  # md5(uuid)
         T.StructField("uuid", T.StringType()),
         T.StructField("vid", T.LongType()),  # properties.id
-        T.StructField("color", T.StringType()),
-        T.StructField("direction", T.BooleanType()),
-        T.StructField("lineId", T.StringType()),
+        *_flat_fields("color", "direction", "lineId"),
     ]
 )
 
-VELOCITY_L2_SCHEMA = T.StructType(
+VELOCITY_L2_SCHEMA = _partitioned(
+    T.StructType(
+        [
+            FLAT_SCHEMA["timestamp"],
+            T.StructField("l1_id", T.StringType()),
+            *_flat_fields(*_OBSERVATION_FIELDS),
+        ]
+    )
+)
+
+# Two-level snowflake (``postgresql_velocity_2levels.py``): bus <- vehicle
+# <- obs, keyed by md5 hashes.
+VELOCITY2_BUS_SCHEMA = T.StructType(
     [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("l1_id", T.LongType(), False),
-        T.StructField("distance", T.FloatType()),
-        T.StructField("pointId", T.ShortType()),
-        T.StructField("distanceFromPoint", T.IntegerType()),
-        T.StructField("coordinates_0", T.FloatType()),
-        T.StructField("coordinates_1", T.FloatType()),
+        T.StructField("bus_id", T.StringType()),
+        *_flat_fields("color", "direction", "lineId"),
     ]
+)
+
+VELOCITY2_VEHICLE_SCHEMA = T.StructType(
+    [
+        T.StructField("vehicle_id", T.StringType()),
+        T.StructField("uuid", T.StringType()),
+        T.StructField("vid", T.LongType()),
+        T.StructField("bus_id", T.StringType()),
+    ]
+)
+
+VELOCITY2_OBS_SCHEMA = _partitioned(
+    T.StructType(
+        [
+            FLAT_SCHEMA["timestamp"],
+            T.StructField("vehicle_id", T.StringType()),
+            *_flat_fields(*_OBSERVATION_FIELDS),
+        ]
+    )
+)
+
+# ---------------------------------------------------------------------------
+# A.3b Encoded stores: the flat table with its coordinates replaced.
+# ---------------------------------------------------------------------------
+
+_FLAT_NO_COORDS = [f for f in FLAT_SCHEMA.fields if not f.name.startswith("coordinates_")]
+
+
+def cantor_schema(packed: bool) -> T.StructType:
+    """Cantor store: (lon, lat) paired into one integer, packed to 15
+    little-endian bytes or kept as the decimal pair."""
+    paired = T.BinaryType() if packed else T.DecimalType(38, 0)
+    return _partitioned(
+        T.StructType(_FLAT_NO_COORDS + [T.StructField("coords_paired", paired)])
+    )
+
+
+# Velocity-split store: per-document zone map + fixed-point offsets.
+VELOCITY_SPLIT_DOC_SCHEMA = T.StructType(
+    [
+        FLAT_SCHEMA["timestamp"],
+        T.StructField("min_lon", T.DoubleType()),
+        T.StructField("min_lat", T.DoubleType()),
+    ]
+)
+
+VELOCITY_SPLIT_OBS_SCHEMA = _partitioned(
+    T.StructType(
+        _FLAT_NO_COORDS
+        + [T.StructField("lon_fp", T.LongType()), T.StructField("lat_fp", T.LongType())]
+    )
 )
 
 # ---------------------------------------------------------------------------

@@ -26,12 +26,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .run_identity import checkpoint_run_id
-from ..session import local_df
+from .run_identity import checkpoint_run_id, last_epoch, record_epoch
 
 from ..operators.flat_store import explode_features
+from ..operators.maintenance import exists
 from ..functions.codecs import ts_bucket
-from ..schemas import FEATURE_COLLECTION_SCHEMA, TS_BUCKET_COL
+from ..schemas import FEATURE_COLLECTION_SCHEMA, FLAT_STORE_SCHEMA, TS_BUCKET_COL
 
 
 def read_snapshot_stream(
@@ -73,18 +73,11 @@ def stream_to_flat_store(
             return
         spark = batch.sparkSession
         fresh = batch
-        try:
-            existing = spark.read.parquet(table_path).select("timestamp")
-        except Exception as exc:  # narrow: only "empty store" shapes
-            from ..errors import is_missing_store_error
-
-            if not is_missing_store_error(exc):
-                raise
-            existing = None
-        if existing is not None:
+        if exists(spark, table_path):
             # executor-side anti-join, never a driver timestamp list — a
             # replayed availableNow backlog is the whole history
-            fresh = batch.join(existing, "timestamp", "left_anti")
+            existing = spark.read.schema(FLAT_STORE_SCHEMA).parquet(table_path)
+            fresh = batch.join(existing.select("timestamp"), "timestamp", "left_anti")
         if fresh.isEmpty():
             return
         (
@@ -180,12 +173,7 @@ def stream_to_ann_index(
        is md5(checkpointLocation) — a NEW stream attached to an existing
        store starts its own epoch sequence instead of being silently
        swallowed by another run's high-water mark) and skips an epoch at
-       or below its own run's mark without touching the id table.
-
-    State reads narrow their error handling to missing-path /
-    empty-directory conditions; any other read failure raises instead of
-    silently re-enabling a replay window."""
-
+       or below its own run's mark without touching the id table."""
 
     state_path = f"{store.path}/stream_state.parquet"
     run_id = checkpoint_run_id(checkpoint)  # nonce-mixed: a recreated
@@ -193,24 +181,11 @@ def stream_to_ann_index(
     # collide with a previous run's replay stamps
     run_path = f"{state_path}/run_id={run_id}"
 
-    def _last_epoch(spark) -> int:
-        try:
-            row = spark.read.parquet(run_path).agg(
-                F.max("last_epoch").alias("e")
-            ).first()
-        except Exception as exc:  # narrow: only "no state yet" shapes
-            from ..errors import is_missing_store_error
-
-            if is_missing_store_error(exc):
-                return -1
-            raise
-        return -1 if row is None or row["e"] is None else int(row["e"])
-
     def flush(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
         spark = batch.sparkSession
-        if epoch_id <= _last_epoch(spark):
+        if epoch_id <= last_epoch(spark, run_path):
             return  # same-run replay: already fully applied
         # idempotent append: drop ids the store already holds, via a
         # pure executor-side anti-join — nothing returns to the driver.
@@ -230,9 +205,7 @@ def stream_to_ann_index(
                 store.append(fresh, id_col=id_col, vec_col=vec_col)
         finally:
             fresh.unpersist()
-        local_df(spark, [(int(epoch_id),)], "last_epoch long").coalesce(
-            1
-        ).write.mode("overwrite").parquet(run_path)
+        record_epoch(spark, run_path, epoch_id)
 
     return (
         embeddings_stream.writeStream.foreachBatch(flush)

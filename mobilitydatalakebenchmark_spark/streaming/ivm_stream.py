@@ -17,15 +17,11 @@ from __future__ import annotations
 
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .run_identity import checkpoint_run_id
-from ..session import local_df
+from .run_identity import checkpoint_run_id, last_epoch, record_epoch
 
 from ..operators.ivm import MaterializedJoin
-
-from ..errors import is_missing_store_error
 
 
 def stream_to_materialized_join(
@@ -44,24 +40,11 @@ def stream_to_materialized_join(
     # collide with a previous run's replay stamps
     run_path = f"{state_path}/run_id={run_id}"
 
-    def _last_epoch(spark) -> int:
-        try:
-            row = (
-                spark.read.parquet(run_path)
-                .agg(F.max("last_epoch").alias("e"))
-                .first()
-            )
-        except Exception as exc:  # narrow: only "no state yet" shapes
-            if not is_missing_store_error(exc):
-                raise
-            return -1
-        return -1 if row is None or row["e"] is None else int(row["e"])
-
     def flush(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
         spark = batch.sparkSession
-        if epoch_id <= _last_epoch(spark):
+        if epoch_id <= last_epoch(spark, run_path):
             return  # same-run replay: already fully applied
         # two-sided idempotent apply: the view and the left base are each
         # deduped independently against the batch (executor-side
@@ -69,9 +52,7 @@ def stream_to_materialized_join(
         # write and the base write of a previous attempt converges on
         # replay instead of double-inserting join rows
         mj.append_idempotent(batch, row_id_col)
-        local_df(spark, [(int(epoch_id),)], "last_epoch long").coalesce(
-            1
-        ).write.mode("overwrite").parquet(run_path)
+        record_epoch(spark, run_path, epoch_id)
 
     return (
         left_stream.writeStream.foreachBatch(flush)

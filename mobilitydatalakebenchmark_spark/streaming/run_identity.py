@@ -19,7 +19,35 @@ import hashlib
 import os
 import uuid
 
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+
+from ..operators.maintenance import exists
+from ..session import local_df
+
 _NONCE_FILE = "_run_nonce"
+_EPOCH_SCHEMA = "last_epoch long"
+
+
+def last_epoch(spark: SparkSession, run_path: str) -> int:
+    """The epoch high-water mark recorded under ``run_path``; -1 before
+    the run's first recorded epoch."""
+    if not exists(spark, run_path):
+        return -1
+    row = (
+        spark.read.schema(_EPOCH_SCHEMA)
+        .parquet(run_path)
+        .agg(F.max("last_epoch").alias("e"))
+        .first()
+    )
+    return -1 if row is None or row["e"] is None else int(row["e"])
+
+
+def record_epoch(spark: SparkSession, run_path: str, epoch_id: int) -> None:
+    """Overwrite the run's high-water mark with ``epoch_id``."""
+    local_df(spark, [(int(epoch_id),)], _EPOCH_SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(run_path)
 
 
 def checkpoint_run_id(checkpoint: str) -> str:

@@ -20,23 +20,19 @@ batch turns out partially-or-fully written, the manifest rows for the
 shards holding it are re-derived from the data first (``repair_manifest``)
 — healing the crash window between a data append and its manifest
 rewrite, which would otherwise leave fill levels understated and place
-later docs at overlapping offsets. State reads narrow their error
-handling to missing-path shapes.
+later docs at overlapping offsets.
 """
 
 from __future__ import annotations
 
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .run_identity import checkpoint_run_id
-from ..session import local_df
+from .run_identity import checkpoint_run_id, last_epoch, record_epoch
 
+from ..operators.maintenance import exists
 from ..operators.shards import append_shards, repair_manifest
-
-from ..errors import is_missing_store_error
 
 
 def stream_to_shards(
@@ -59,32 +55,15 @@ def stream_to_shards(
     # collide with a previous run's replay stamps
     run_path = f"{state_path}/run_id={run_id}"
 
-    def _last_epoch(spark) -> int:
-        try:
-            row = (
-                spark.read.parquet(run_path)
-                .agg(F.max("last_epoch").alias("e"))
-                .first()
-            )
-        except Exception as exc:  # narrow: only "no state yet" shapes
-            if not is_missing_store_error(exc):
-                raise
-            return -1
-        return -1 if row is None or row["e"] is None else int(row["e"])
-
     def _existing_ids(spark) -> "DataFrame | None":
-        try:
-            return spark.read.parquet(f"{path}/data.parquet").select(id_col)
-        except Exception as exc:  # narrow: empty store
-            if not is_missing_store_error(exc):
-                raise
-            return None
+        data = f"{path}/data.parquet"
+        return spark.read.parquet(data).select(id_col) if exists(spark, data) else None
 
     def flush(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
         spark = batch.sparkSession
-        if epoch_id <= _last_epoch(spark):
+        if epoch_id <= last_epoch(spark, run_path):
             return  # same-run replay: already fully applied
         existing = _existing_ids(spark)
         if existing is None:
@@ -123,9 +102,7 @@ def stream_to_shards(
         finally:
             if existing is not None:
                 fresh.unpersist()
-        local_df(spark, [(int(epoch_id),)], "last_epoch long").coalesce(
-            1
-        ).write.mode("overwrite").parquet(run_path)
+        record_epoch(spark, run_path, epoch_id)
 
     return (
         docs_stream.writeStream.foreachBatch(flush)

@@ -49,23 +49,6 @@ def test_all_queries_plan_without_execution(spark):
         _ = df.schema  # forces analysis
 
 
-def test_store_benchmark_harness_runs(spark, documents_df, snapshots, tmp_path):
-    """tools/bench_stores.run_store must keep working (the reference-
-    workload metric harness)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    from bench_stores import run_store
-
-    from mobilitydatalakebenchmark_spark.operators.flat_store import FlatParquetStore
-
-    store = FlatParquetStore(str(tmp_path / "bench"))
-    res = run_store(
-        "flat", store, documents_df, [ts for ts, _ in snapshots], 2, spark
-    )
-    assert res["write_s"] > 0 and res["size_bytes"] > 0 and res["reads"] == 2
-
-
 def test_rotation_names_all_exist():
     """Every name in the driver-window ordering tuples must be a real
     registry entry — a typo would silently shrink the first-50 window."""

@@ -263,26 +263,41 @@ class TestStoreErrorNarrowing:
         with _pytest.raises(Exception):
             store.write(documents_df, mode="append")
 
-    def test_error_classifier_rejects_unrelated_analysis_errors(self, spark):
-        from pyspark.errors import AnalysisException
+    def test_velocity2_append_raises_on_corrupt_dim(
+        self, spark, tmp_path_factory, documents_df
+    ):
+        import glob
+        import os
 
-        from mobilitydatalakebenchmark_spark.errors import (
-            is_missing_store_error,
-            is_schema_inference_error,
+        from mobilitydatalakebenchmark_spark.operators.velocity2_store import (
+            Velocity2ParquetStore,
         )
 
-        # real missing-path error carries the PATH_NOT_FOUND class
-        try:
-            spark.read.parquet("/nonexistent/spark_graft_nowhere").collect()
-            raise AssertionError("read should have failed")
-        except AnalysisException as exc:
-            assert is_missing_store_error(exc)
-            assert not is_schema_inference_error(exc)
-        # an unrelated analysis error that merely MENTIONS the magic
-        # text must NOT classify as benign (typed class wins)
-        try:
-            spark.sql("SELECT UNABLE_TO_INFER_SCHEMA FROM nonexistent_tbl")
-            raise AssertionError("sql should have failed")
-        except AnalysisException as exc:
-            assert not is_missing_store_error(exc)
-            assert not is_schema_inference_error(exc)
+        store = Velocity2ParquetStore(
+            str(tmp_path_factory.mktemp("vel2corrupt") / "t")
+        )
+        store.write(documents_df.orderBy("timestamp").limit(10))
+        for f in glob.glob(os.path.join(store._p("vehicle"), "*.parquet")):
+            with open(f, "wb") as fh:
+                fh.write(b"not a parquet file")
+        with pytest.raises(Exception):
+            store.write(documents_df, mode="append")
+
+    @pytest.mark.parametrize("kind", ["velocity", "velocity2"])
+    def test_first_append_into_missing_path(
+        self, spark, tmp_path, documents_df, snapshots, kind
+    ):
+        import os
+
+        from mobilitydatalakebenchmark_spark.operators.velocity2_store import (
+            Velocity2ParquetStore,
+        )
+
+        cls = VelocityParquetStore if kind == "velocity" else Velocity2ParquetStore
+        store = cls(str(tmp_path / "t"))
+        assert not os.path.exists(store.path)
+        store.write(documents_df.orderBy("timestamp").limit(10), mode="append")
+        ts, data = sorted(snapshots)[3]
+        rows = store.get_document(spark, ts).collect()
+        assert len(rows) == 1
+        _check_doc(rows[0], ts, data)
