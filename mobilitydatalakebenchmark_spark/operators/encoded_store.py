@@ -31,6 +31,7 @@ from ..functions.codecs import (
 )
 from ..schemas import (
     TS_BUCKET_COL,
+    TS_BUCKET_LEN,
     VELOCITY_SPLIT_DOC_SCHEMA,
     VELOCITY_SPLIT_OBS_SCHEMA,
     cantor_schema,
@@ -46,9 +47,8 @@ class CantorParquetStore:
     pair (pure-expression path, no pandas_udf in the write). Positive
     coordinates only (offset=0), matching the reference's domain."""
 
-    def __init__(self, path: str, bucket_len: int = 13, packed: bool = True):
+    def __init__(self, path: str, packed: bool = True):
         self.path = path
-        self.bucket_len = bucket_len
         self.packed = packed
 
     def write(self, documents: DataFrame, mode: str = "overwrite") -> None:
@@ -62,7 +62,7 @@ class CantorParquetStore:
         encoded = flat.withColumns(
             {
                 "coords_paired": coord_col,
-                TS_BUCKET_COL: ts_bucket(F.col("timestamp"), self.bucket_len),
+                TS_BUCKET_COL: ts_bucket(F.col("timestamp")),
             }
         ).drop("coordinates_0", "coordinates_1")
         (
@@ -88,7 +88,7 @@ class CantorParquetStore:
 
     def get_document(self, spark: SparkSession, timestamp: str) -> DataFrame:
         flat = self.scan_decoded(spark).filter(
-            (F.col(TS_BUCKET_COL) == timestamp[: self.bucket_len])
+            (F.col(TS_BUCKET_COL) == timestamp[:TS_BUCKET_LEN])
             & (F.col("timestamp") == timestamp)
         )
         return renest_documents(flat)
@@ -105,9 +105,8 @@ class VelocitySplitParquetStore:
     doc table: (timestamp, min_lon, min_lat) — the per-document zone map;
     obs table: coordinates as long offsets from the zone minimum."""
 
-    def __init__(self, path: str, bucket_len: int = 13):
+    def __init__(self, path: str):
         self.path = path
-        self.bucket_len = bucket_len
 
     def _p(self, table: str) -> str:
         return f"{self.path}/{table}"
@@ -128,7 +127,7 @@ class VelocitySplitParquetStore:
                     "lat_fp": encode_fixed_point(
                         F.col("coordinates_1").cast("double"), F.col("min_lat")
                     ),
-                    TS_BUCKET_COL: ts_bucket(F.col("timestamp"), self.bucket_len),
+                    TS_BUCKET_COL: ts_bucket(F.col("timestamp")),
                 }
             )
             .drop("coordinates_0", "coordinates_1", "min_lon", "min_lat")
@@ -143,7 +142,7 @@ class VelocitySplitParquetStore:
             .filter(F.col("timestamp") == timestamp)
         )
         obs = spark.read.schema(VELOCITY_SPLIT_OBS_SCHEMA).parquet(self._p("obs")).filter(
-            (F.col(TS_BUCKET_COL) == timestamp[: self.bucket_len])
+            (F.col(TS_BUCKET_COL) == timestamp[:TS_BUCKET_LEN])
             & (F.col("timestamp") == timestamp)
         )
         flat = (

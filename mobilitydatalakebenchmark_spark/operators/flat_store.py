@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.codecs import decode_direction, encode_direction, ts_bucket
-from ..schemas import FLAT_STORE_SCHEMA, TS_BUCKET_COL
+from ..schemas import FLAT_STORE_SCHEMA, TS_BUCKET_COL, TS_BUCKET_LEN
 
 
 def explode_features(documents: DataFrame) -> DataFrame:
@@ -97,39 +97,27 @@ def renest_documents(flat: DataFrame) -> DataFrame:
 class FlatParquetStore:
     """End-to-end store: documents -> partitioned parquet -> point lookups.
 
-    write: S3 (partitionBy hour bucket, snappy); read: S4+F7 (partition
-    pruning + parquet predicate pushdown); reconstruct: P3.
+    write: S3 (partitionBy hour bucket, the session's snappy default);
+    read: S4+F7 (partition pruning + parquet predicate pushdown);
+    reconstruct: P3.
     """
 
-    def __init__(
-        self,
-        path: str,
-        bucket_len: int = 13,
-        compression: str = "snappy",
-        segment_by: str | None = None,
-    ):
+    def __init__(self, path: str, segment_by: str | None = None):
         """segment_by: sort rows within each partition by this column before
         writing (S14 — TimescaleDB's compress_segmentby='uuid',
         timescaledb_store.py:63-64): co-locates each entity's rows inside
         the parquet row groups, improving both compression (runs of equal
         values dictionary-encode) and per-entity read locality."""
         self.path = path
-        self.bucket_len = bucket_len
-        self.compression = compression
         self.segment_by = segment_by
 
     def write(self, documents: DataFrame, mode: str = "overwrite") -> None:
         flat = explode_features(documents).withColumn(
-            TS_BUCKET_COL, ts_bucket(F.col("timestamp"), self.bucket_len)
+            TS_BUCKET_COL, ts_bucket(F.col("timestamp"))
         )
         if self.segment_by:
             flat = flat.sortWithinPartitions(self.segment_by, "timestamp")
-        (
-            flat.write.mode(mode)
-            .option("compression", self.compression)
-            .partitionBy(TS_BUCKET_COL)
-            .parquet(self.path)
-        )
+        flat.write.mode(mode).partitionBy(TS_BUCKET_COL).parquet(self.path)
 
     def scan(self) -> DataFrame:
         return SparkSession.active().read.schema(FLAT_STORE_SCHEMA).parquet(self.path)
@@ -138,7 +126,7 @@ class FlatParquetStore:
         """Point lookup: ts_bucket partition pruning happens automatically
         because the bucket is a prefix-function of the timestamp literal."""
         flat = self.scan().filter(
-            (F.col(TS_BUCKET_COL) == timestamp[: self.bucket_len])
+            (F.col(TS_BUCKET_COL) == timestamp[:TS_BUCKET_LEN])
             & (F.col("timestamp") == timestamp)
         )
         return renest_documents(flat)

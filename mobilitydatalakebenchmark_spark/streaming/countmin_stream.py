@@ -10,11 +10,9 @@ so materializing it driver-side before the overwrite is bounded by the
 SKETCH size, never the data — the same "collect only literals" budget
 as the islands maintainer's bucket keys.
 
-Idempotence follows the rollup discipline: every stored row carries the
-(run, epoch) stamp of the merge that wrote it; a replayed epoch whose
-stamp already matches is a no-op, and run identity is nonce-mixed per
-checkpoint creation (run_identity.py) so a recreated checkpoint cannot
-replay-mask fresh batches.
+Idempotence is the txn stamp of ``run_identity.py``: every stored row
+carries the (run, epoch) stamp of the merge that wrote it, and a
+replayed epoch whose stamp already matches is a no-op.
 
 Crash safety follows the versioned-store manifest discipline: each
 merge writes the WHOLE merged table to a FRESH ``cells-<n>/`` dir under
@@ -31,24 +29,26 @@ most 2 sketch-sized dirs.
 from __future__ import annotations
 
 import os
+import re
+import shutil
 
 from pyspark.sql import DataFrame
 
-from .run_identity import checkpoint_run_id
+from .run_identity import Txn, start_sink
 from ..operators.countmin import countmin_build
 
 _POINTER = "LATEST"
+_CELLS_DIR = re.compile(r"cells-(\d+)")
 
 
 def _latest_cells_dir(table_path: str) -> str | None:
     """The committed cell dir per the pointer file, or None if no merge
     has ever committed."""
     ptr = os.path.join(table_path, _POINTER)
-    try:
-        with open(ptr) as fh:
-            name = fh.read().strip()
-    except OSError:
+    if not os.path.isfile(ptr):
         return None
+    with open(ptr) as fh:
+        name = fh.read().strip()
     full = os.path.join(table_path, name)
     return full if name and os.path.isdir(full) else None
 
@@ -66,19 +66,11 @@ def _commit_cells_dir(table_path: str, name: str) -> None:
         fh.flush()
         os.fsync(fh.fileno())
     os.replace(tmp, ptr)
-    import shutil
-
     seq = int(name.rsplit("-", 1)[1])
     for entry in os.listdir(table_path):
-        if entry.startswith("cells-"):
-            try:
-                n = int(entry.rsplit("-", 1)[1])
-            except ValueError:
-                continue
-            if n < seq - 1:  # keep current + immediate predecessor
-                shutil.rmtree(
-                    os.path.join(table_path, entry), ignore_errors=True
-                )
+        m = _CELLS_DIR.fullmatch(entry)
+        if m and int(m.group(1)) < seq - 1:  # keep current + predecessor
+            shutil.rmtree(os.path.join(table_path, entry), ignore_errors=True)
 
 
 def upsert_countmin_batch(
@@ -125,10 +117,9 @@ def upsert_countmin_batch(
     ]
     name = f"cells-{seq}"
     target = os.path.join(table_path, name)
-    if os.path.exists(target):  # orphan from a crash before the pointer
-        import shutil  # swap — LATEST never referenced it, safe to clear
-
-        shutil.rmtree(target)
+    # clear an orphan from a crash before the pointer swap — LATEST never
+    # referenced it (a failure to clear surfaces in the write below)
+    shutil.rmtree(target, ignore_errors=True)
     local_df(
         spark,
         rows,
@@ -146,21 +137,11 @@ def stream_countmin(
     w: int = 64,
 ):
     """Attach the CMS-maintenance sink and start it (availableNow)."""
-    run_id = checkpoint_run_id(checkpoint)  # nonce-mixed: a recreated
-    # checkpoint gets a NEW identity, so epoch-0 restarts cannot
-    # collide with a previous run's replay stamps
 
-    def _sink(batch: DataFrame, epoch_id: int) -> None:
-        upsert_countmin_batch(
-            batch, table_path, key_col, d=d, w=w, txn=(run_id, int(epoch_id))
-        )
+    def _sink(batch: DataFrame, txn: Txn) -> None:
+        upsert_countmin_batch(batch, table_path, key_col, d=d, w=w, txn=txn)
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_sink(stream, checkpoint, _sink)
 
 
 def read_countmin(spark, table_path: str) -> DataFrame:

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .run_identity import checkpoint_run_id, last_epoch, record_epoch
+from .run_identity import Txn, start_sink
 
 from ..operators.flat_store import explode_features
 from ..operators.maintenance import exists
@@ -61,16 +61,15 @@ def stream_to_flat_store(
     """W5: micro-batch append into the flat parquet store. Each epoch is
     the reference's 'buffer flush' — explode+flatten+bucket, append.
 
-    Idempotent under replay (round 6, same contract as the ANN/shard/IVM
-    sinks): a snapshot's timestamp is its identity (`base_store.py:12-14`
-    — one document per timestamp), so each batch is stripped of
-    timestamps the store already holds before appending. A crash between
-    the append and the offset commit, or a fresh checkpoint re-delivering
-    old snapshot files, cannot double-insert a snapshot's rows."""
+    Idempotent under replay: a snapshot's timestamp is its identity
+    (`base_store.py:12-14` — one document per timestamp), so each batch
+    is stripped of timestamps the store already holds before appending.
+    A crash between the append and the offset commit, or a fresh
+    checkpoint re-delivering old snapshot files, cannot double-insert a
+    snapshot's rows. A fully replayed or empty batch appends no part
+    file, so the flush needs no emptiness probe."""
 
-    def flush(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def flush(batch: DataFrame, txn: Txn) -> None:
         spark = batch.sparkSession
         fresh = batch
         if exists(spark, table_path):
@@ -78,8 +77,6 @@ def stream_to_flat_store(
             # replayed availableNow backlog is the whole history
             existing = spark.read.schema(FLAT_STORE_SCHEMA).parquet(table_path)
             fresh = batch.join(existing.select("timestamp"), "timestamp", "left_anti")
-        if fresh.isEmpty():
-            return
         (
             explode_features(fresh)
             .withColumn(TS_BUCKET_COL, ts_bucket(F.col("timestamp")))
@@ -88,12 +85,7 @@ def stream_to_flat_store(
             .parquet(table_path)
         )
 
-    return (
-        documents.writeStream.foreachBatch(flush)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_sink(documents, checkpoint, flush)
 
 
 def windowed_vehicle_counts(documents: DataFrame, slide: str | None = None) -> DataFrame:
@@ -168,25 +160,11 @@ def stream_to_ann_index(
        the store's id column per micro-batch — the price of idempotence
        without a transactional sink; with Delta available this becomes a
        MERGE and the scan goes away.
-    2. Epoch fast path: the flush records the last applied epoch PER
-       CHECKPOINT (epoch ids are scoped to a checkpoint, so the state key
-       is md5(checkpointLocation) — a NEW stream attached to an existing
-       store starts its own epoch sequence instead of being silently
-       swallowed by another run's high-water mark) and skips an epoch at
-       or below its own run's mark without touching the id table."""
+    2. Epoch fast path: ``start_sink``'s per-run high-water mark under
+       ``stream_state.parquet`` skips an epoch at or below its own run's
+       mark without touching the id table."""
 
-    state_path = f"{store.path}/stream_state.parquet"
-    run_id = checkpoint_run_id(checkpoint)  # nonce-mixed: a recreated
-    # checkpoint gets a NEW identity, so epoch-0 restarts cannot
-    # collide with a previous run's replay stamps
-    run_path = f"{state_path}/run_id={run_id}"
-
-    def flush(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        if epoch_id <= last_epoch(spark, run_path):
-            return  # same-run replay: already fully applied
+    def flush(batch: DataFrame, txn: Txn) -> None:
         # idempotent append: drop ids the store already holds, via a
         # pure executor-side anti-join — nothing returns to the driver.
         # (A collect()+isin variant is bounded only in steady state: an
@@ -196,7 +174,7 @@ def stream_to_ann_index(
         # id scan stays the big side; the persist pins the anti-join
         # result so the isEmpty probe and the append don't run it twice.
         fresh = batch.join(
-            store.indexed_ids(spark).withColumnRenamed("vec_id", id_col),
+            store.indexed_ids(batch.sparkSession).withColumnRenamed("vec_id", id_col),
             id_col,
             "left_anti",
         ).persist()
@@ -205,13 +183,12 @@ def stream_to_ann_index(
                 store.append(fresh, id_col=id_col, vec_col=vec_col)
         finally:
             fresh.unpersist()
-        record_epoch(spark, run_path, epoch_id)
 
-    return (
-        embeddings_stream.writeStream.foreachBatch(flush)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_sink(
+        embeddings_stream,
+        checkpoint,
+        flush,
+        marks=f"{store.path}/stream_state.parquet",
     )
 
 

@@ -9,28 +9,20 @@ raw-row history: per batch, re-coalescing (stored islands for the touched
 keys) ∪ (batch rows, weight 1) with ``weight_col="n_rows"`` yields exactly
 the islands a from-scratch batch run would produce.
 
-Scale posture (the rollup_stream.py pattern):
-
-1. keys hash into a fixed small number of partitions (``n_buckets`` —
-   the partition column, so reads prune statically);
-2. each batch reads back ONLY the buckets it touches, merges, and
-   rewrites those partitions alone via dynamic partition overwrite —
-   cost O(batch + touched-bucket islands), independent of history;
-3. idempotence by (run, epoch) transaction stamp per bucket — the
-   rollup_stream discipline: coalesced islands have no row ids to
-   anti-join on, so the stamp carries the replay-dedup information the
-   data cannot. A crash between the partition overwrite and the offset
-   commit replays the epoch; stamped buckets skip it.
+Keys hash into ``n_buckets`` partitions, and each batch re-coalesces
+its touched buckets through ``run_identity.merge_partitions`` (touched
+partitions only, txn-stamped replay protection) — cost O(batch +
+touched-bucket islands), independent of history. The stored table has
+no ``island`` column: ordinals are per-merge artifacts, so
+``read_islands`` derives them.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .run_identity import checkpoint_run_id
+from .run_identity import STAMP_COLS, Txn, merge_partitions, start_sink
 from ..operators.timeseries import coalesce_intervals
 
 _BUCKET = "kbucket"
@@ -48,64 +40,28 @@ def upsert_islands_batch(
     """Merge one micro-batch of raw [start, end) rows into the stored
     islands table. See the module docstring for the idempotence and
     partition-pruning contract."""
-    spark = batch.sparkSession
-    rows = batch.select(
-        F.col(key_col),
-        F.col(start_col),
-        F.col(end_col),
-        F.lit(1).cast("long").alias("n_rows"),
-        F.pmod(F.hash(key_col), F.lit(n_buckets)).alias(_BUCKET),
-    )
-    # touched partitions: bounded by n_buckets (a handful of literals),
-    # never by row count — safe to collect even on a full-backlog replay
-    touched = [r[_BUCKET] for r in rows.select(_BUCKET).distinct().collect()]
-    if not touched:
-        return
-    merged_src = rows
-    if os.path.exists(table_path):
-        existing = spark.read.parquet(table_path).filter(
-            F.col(_BUCKET).isin(touched)
+
+    def bucketed(df: DataFrame) -> DataFrame:
+        return df.withColumn(_BUCKET, F.pmod(F.hash(key_col), F.lit(n_buckets)))
+
+    rows = bucketed(
+        batch.select(
+            F.col(key_col),
+            F.col(start_col),
+            F.col(end_col),
+            F.lit(1).cast("long").alias("n_rows"),
         )
-        if txn is not None:
-            done = [
-                r[_BUCKET]
-                for r in existing.filter(
-                    (F.col("_txn_run") == txn[0])
-                    & (F.col("_txn_epoch") == txn[1])
-                )
-                .select(_BUCKET)
-                .distinct()
-                .collect()
-            ]
-            if done:  # replayed epoch: those buckets already merged it
-                touched = [b for b in touched if b not in done]
-                if not touched:
-                    return
-                merged_src = merged_src.filter(~F.col(_BUCKET).isin(done))
-                existing = existing.filter(~F.col(_BUCKET).isin(done))
-        merged_src = merged_src.unionByName(
-            existing.select(
-                key_col, start_col, end_col, "n_rows", _BUCKET
-            )
-        )
-    islands = coalesce_intervals(
-        merged_src,
-        key_col,
-        start_col,
-        end_col,
-        weight_col="n_rows",
-    ).withColumns(
-        {
-            _BUCKET: F.pmod(F.hash(key_col), F.lit(n_buckets)),
-            "_txn_run": F.lit(txn[0] if txn else None).cast("string"),
-            "_txn_epoch": F.lit(txn[1] if txn else None).cast("long"),
-        }
     )
-    (
-        islands.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(_BUCKET)
-        .parquet(table_path)
+    merge_partitions(
+        rows,
+        table_path,
+        _BUCKET,
+        lambda intervals: bucketed(
+            coalesce_intervals(
+                intervals, key_col, start_col, end_col, weight_col="n_rows"
+            ).drop("island")
+        ),
+        txn,
     )
 
 
@@ -119,13 +75,9 @@ def stream_islands(
     n_buckets: int = 16,
 ):
     """Attach the island-maintenance sink to a streaming DataFrame and
-    start it (availableNow — drain then stop)."""
+    start it (``run_identity.start_sink``)."""
 
-    run_id = checkpoint_run_id(checkpoint)  # nonce-mixed: a recreated
-    # checkpoint gets a NEW identity, so epoch-0 restarts cannot
-    # collide with a previous run's replay stamps
-
-    def _sink(batch: DataFrame, epoch_id: int) -> None:
+    def _sink(batch: DataFrame, txn: Txn) -> None:
         upsert_islands_batch(
             batch,
             table_path,
@@ -133,15 +85,10 @@ def stream_islands(
             start_col,
             end_col,
             n_buckets=n_buckets,
-            txn=(run_id, int(epoch_id)),
+            txn=txn,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_sink(stream, checkpoint, _sink)
 
 
 def read_islands(
@@ -152,6 +99,6 @@ def read_islands(
     recompute the per-key ordinal at read time instead."""
     from pyspark.sql import Window
 
-    df = spark.read.parquet(table_path).drop(_BUCKET, "_txn_run", "_txn_epoch")
+    df = spark.read.parquet(table_path).drop(_BUCKET, *STAMP_COLS)
     w = Window.partitionBy(key_col).orderBy(start_col)
     return df.withColumn("island", F.row_number().over(w))

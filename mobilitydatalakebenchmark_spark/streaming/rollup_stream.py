@@ -2,32 +2,23 @@
 Streaming: keep an `operators/rollup.py` table current as micro-batches
 arrive, rewriting only the time-bucket partitions a batch touches.
 
-The scale posture is the point. Each micro-batch:
-
-1. collapses to its own partial states (`build_rollup` — one narrow
-   shuffle over the batch, not the history);
-2. reads back ONLY the stored partitions for buckets present in the
-   batch (partition pruning on the bucket key — late data reopens just
-   its own bucket);
-3. merges old + new states exactly (`merge_rollup` — sums of sums,
-   min of mins) and rewrites those partitions alone via dynamic
-   partition overwrite.
-
-Cost per batch is O(batch + touched-bucket states), independent of table
-history length. With Delta available the read-merge-rewrite collapses
-into `MERGE INTO` (operators/delta_store.py is the gated variant); the
-parquet + dynamic-overwrite form here has the same semantics on any
-filesystem.
+Each micro-batch collapses to its own partial states (`build_rollup` —
+one narrow shuffle over the batch, not the history), then
+``run_identity.merge_partitions`` reads back only the touched bucket
+partitions (late data reopens just its own bucket), merges old + new
+states exactly (`merge_rollup` — sums of sums, min of mins) and rewrites
+those partitions alone. Cost per batch is O(batch + touched-bucket
+states), independent of table history length. With Delta available the
+read-merge-rewrite collapses into `MERGE INTO`
+(operators/delta_store.py is the gated variant).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .run_identity import checkpoint_run_id
+from .run_identity import STAMP_COLS, Txn, merge_partitions, start_sink
 from ..operators.rollup import build_rollup, merge_rollup
 
 # partition column: a filesystem-safe string form of the bucket timestamp
@@ -54,79 +45,22 @@ def upsert_rollup_batch(
     """Merge one micro-batch into the stored rollup table.
 
     ``txn = (run_id, epoch_id)`` makes the merge IDEMPOTENT per epoch —
-    the Delta ``txnAppId/txnVersion`` pattern on plain parquet: every
-    bucket row written by this merge is stamped with the txn, and a
-    bucket whose stored stamp already equals the incoming txn is skipped
-    (its partition files are left untouched — dynamic overwrite only
-    rewrites partitions present in the output). A replayed epoch — the
-    crash window between the data write and the checkpoint's offset
-    commit — therefore merges each touched bucket exactly once, where an
-    unstamped re-merge would double-count every sum. Aggregate states
-    have no row ids to anti-join on, so the stamp carries the dedup
-    information the data cannot.
-
-    Without ``txn`` the merge is content-idempotent per bucket only if
-    the batch is complete for its buckets (the pre-round-6 behavior,
-    fine for batch backfills)."""
-    spark = batch.sparkSession
+    the Delta ``txnAppId/txnVersion`` pattern on plain parquet, see
+    ``run_identity.merge_partitions``: a replayed epoch merges each
+    touched bucket exactly once, where an unstamped re-merge would
+    double-count every sum."""
     partial = _with_bucket_key(
         build_rollup(
             batch, ts_col, val_col, keys=keys, bucket=bucket,
             distinct_col=distinct_col, quantiles=quantiles,
         )
     )
-    # unlike the row-id dedup sinks (ANN/shard/IVM — executor-side
-    # anti-joins), this collect is safe under a full-backlog replay: it
-    # carries DISTINCT TIME BUCKETS, bounded by the data's time span
-    # (one key per hour/day), not by row count — and the literal isin on
-    # the partition column buys guaranteed static partition pruning,
-    # which a join-based probe would leave to best-effort DPP
-    touched = [r[_BUCKET_KEY] for r in partial.select(_BUCKET_KEY).distinct().collect()]
-    if not touched:
-        return
-    existing = None
-    if os.path.exists(table_path):
-        existing = spark.read.parquet(table_path).filter(
-            F.col(_BUCKET_KEY).isin(touched)
-        )
-        for c in ("_txn_run", "_txn_epoch"):  # legacy tables lack stamps
-            if c not in existing.columns:
-                existing = existing.withColumn(c, F.lit(None))
-        if txn is not None:
-            done = [
-                r[_BUCKET_KEY]
-                for r in existing.filter(
-                    (F.col("_txn_run") == txn[0])
-                    & (F.col("_txn_epoch") == txn[1])
-                )
-                .select(_BUCKET_KEY)
-                .distinct()
-                .collect()
-            ]
-            if done:  # replayed epoch: those buckets already merged it
-                touched = [b for b in touched if b not in done]
-                if not touched:
-                    return
-                partial = partial.filter(~F.col(_BUCKET_KEY).isin(done))
-                existing = existing.filter(~F.col(_BUCKET_KEY).isin(done))
-        merged_src = existing.drop("_txn_run", "_txn_epoch").unionByName(
-            partial
-        )
-    else:
-        merged_src = partial
-    merged = _with_bucket_key(
-        merge_rollup(merged_src, keys=keys).drop("vavg")
-    ).withColumns(
-        {
-            "_txn_run": F.lit(txn[0] if txn else None).cast("string"),
-            "_txn_epoch": F.lit(txn[1] if txn else None).cast("long"),
-        }
-    )
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(_BUCKET_KEY)
-        .parquet(table_path)
+    merge_partitions(
+        partial,
+        table_path,
+        _BUCKET_KEY,
+        lambda states: _with_bucket_key(merge_rollup(states, keys=keys).drop("vavg")),
+        txn,
     )
 
 
@@ -142,17 +76,10 @@ def stream_rollup(
     quantiles: bool = False,
 ):
     """Attach the incremental-rollup sink to a streaming DataFrame and
-    start it (availableNow: drain what exists, then stop — the batch
-    replay mode the driver's workloads use). Each epoch merges under a
-    (checkpoint, epoch) transaction stamp, so the crash window between
-    the partition overwrite and the offset commit cannot double-merge a
-    replayed batch (see upsert_rollup_batch)."""
+    start it (``run_identity.start_sink``). Each epoch merges under its
+    (checkpoint, epoch) transaction stamp."""
 
-    run_id = checkpoint_run_id(checkpoint)  # nonce-mixed: a recreated
-    # checkpoint gets a NEW identity, so epoch-0 restarts cannot
-    # collide with a previous run's replay stamps
-
-    def _sink(batch: DataFrame, epoch_id: int) -> None:
+    def _sink(batch: DataFrame, txn: Txn) -> None:
         upsert_rollup_batch(
             batch,
             table_path,
@@ -160,22 +87,15 @@ def stream_rollup(
             val_col,
             keys=keys,
             bucket=bucket,
-            txn=(run_id, int(epoch_id)),
+            txn=txn,
             distinct_col=distinct_col,
             quantiles=quantiles,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_sink(stream, checkpoint, _sink)
 
 
 def read_rollup(spark, table_path: str) -> DataFrame:
     """The queryable rollup (drops the partition-key and txn-stamp
     helper columns)."""
-    return spark.read.parquet(table_path).drop(
-        _BUCKET_KEY, "_txn_run", "_txn_epoch"
-    )
+    return spark.read.parquet(table_path).drop(_BUCKET_KEY, *STAMP_COLS)

@@ -10,26 +10,22 @@ change), manifest rows re-derived for touched shards only — cost per
 batch is O(batch + touched shards), independent of corpus size, exactly
 the ``rollup_stream`` posture.
 
-Replay protection follows ``streaming/ingest.stream_to_ann_index``: the
-append is IDEMPOTENT (each batch is stripped, via an executor-side
-anti-join, of doc ids the store already holds — a replayed epoch, a
-crash between the data append and the state write, or a fresh checkpoint
-re-delivering old files cannot double-place a document), with a
-per-checkpoint epoch high-water mark as the fast path. When a replayed
-batch turns out partially-or-fully written, the manifest rows for the
-shards holding it are re-derived from the data first (``repair_manifest``)
-— healing the crash window between a data append and its manifest
-rewrite, which would otherwise leave fill levels understated and place
-later docs at overlapping offsets.
+Replay protection (the sink contract is in ``run_identity.py``): each
+batch is stripped, via an executor-side anti-join, of doc ids the store
+already holds, with a per-run epoch high-water mark as the fast path.
+When a replayed batch turns out partially-or-fully written, the manifest
+rows for the shards holding it are re-derived from the data first
+(``repair_manifest``) — healing the crash window between a data append
+and its manifest rewrite, which would otherwise leave fill levels
+understated and place later docs at overlapping offsets.
 """
 
 from __future__ import annotations
 
-
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from .run_identity import checkpoint_run_id, last_epoch, record_epoch
+from .run_identity import Txn, start_sink
 
 from ..operators.maintenance import exists
 from ..operators.shards import append_shards, repair_manifest
@@ -49,24 +45,17 @@ def stream_to_shards(
     with the same batches in order (pinned by test), and the persisted
     manifest always matches the written data (``verify_shards``)."""
 
-    state_path = f"{path}/stream_state.parquet"
-    run_id = checkpoint_run_id(checkpoint)  # nonce-mixed: a recreated
-    # checkpoint gets a NEW identity, so epoch-0 restarts cannot
-    # collide with a previous run's replay stamps
-    run_path = f"{state_path}/run_id={run_id}"
-
     def _existing_ids(spark) -> "DataFrame | None":
         data = f"{path}/data.parquet"
         return spark.read.parquet(data).select(id_col) if exists(spark, data) else None
 
-    def flush(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def flush(batch: DataFrame, txn: Txn) -> None:
         spark = batch.sparkSession
-        if epoch_id <= last_epoch(spark, run_path):
-            return  # same-run replay: already fully applied
         existing = _existing_ids(spark)
         if existing is None:
+            # an empty first batch would write a store with no part files
+            if batch.isEmpty():
+                return
             fresh, n_batch, n_fresh = batch, 1, 1  # empty store: all fresh
         else:
             # executor-side anti-join — never a driver id list (an
@@ -102,11 +91,7 @@ def stream_to_shards(
         finally:
             if existing is not None:
                 fresh.unpersist()
-        record_epoch(spark, run_path, epoch_id)
 
-    return (
-        docs_stream.writeStream.foreachBatch(flush)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_sink(
+        docs_stream, checkpoint, flush, marks=f"{path}/stream_state.parquet"
     )

@@ -3,16 +3,10 @@
 Frontier merge is associative and history-free (operators/skyline.py:
 ``frontier(frontier(A) ∪ B) == frontier(A ∪ B)``), so the maintained
 state is just the current frontier — typically orders of magnitude
-smaller than the stream. Same sink discipline as streaming/intervals.py
-(itself the rollup_stream pattern):
-
-1. group keys hash into ``n_buckets`` partition buckets (static pruning);
-2. each batch reads back only its touched buckets, re-sweeps
-   (stored frontier ∪ batch), rewrites those partitions alone via
-   dynamic partition overwrite;
-3. (run, epoch) transaction stamps make a replayed epoch a no-op per
-   bucket — frontier rows have no row ids to anti-join on, so the stamp
-   carries the replay-dedup information.
+smaller than the stream. Group keys hash into ``n_buckets`` partition
+buckets, and each batch re-sweeps (stored frontier ∪ batch) for the
+buckets it touches through ``run_identity.merge_partitions`` (touched
+partitions only, txn-stamped replay protection).
 
 Caveat the batch operator doesn't have: ``n_dups`` counts every arrived
 duplicate of a surviving frontier POINT, but a point dominated later is
@@ -23,12 +17,10 @@ frontier (the useful invariant; tests pin it against the batch run).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .run_identity import checkpoint_run_id
+from .run_identity import STAMP_COLS, Txn, merge_partitions, start_sink
 from ..operators.skyline import pareto_frontier
 
 _BUCKET = "kbucket"
@@ -45,64 +37,31 @@ def upsert_frontier_batch(
     txn: tuple[str, int] | None = None,
 ) -> None:
     """Merge one micro-batch into the stored per-group frontier table."""
-    spark = batch.sparkSession
-    rows = batch.select(
-        by,
-        cost_col,
-        gain_col,
-        F.col(id_col),
-        F.lit(1).cast("long").alias("n_dups"),
-        F.pmod(F.hash(by), F.lit(n_buckets)).alias(_BUCKET),
-    )
-    touched = [r[_BUCKET] for r in rows.select(_BUCKET).distinct().collect()]
-    if not touched:
-        return
-    merged_src = rows
-    if os.path.exists(table_path):
-        existing = spark.read.parquet(table_path).filter(
-            F.col(_BUCKET).isin(touched)
+
+    def bucketed(df: DataFrame) -> DataFrame:
+        return df.withColumn(_BUCKET, F.pmod(F.hash(by), F.lit(n_buckets)))
+
+    # columns in pareto_frontier's output order, so the stored table
+    # reads back with the same layout it is merged from
+    rows = bucketed(
+        batch.select(
+            by,
+            cost_col,
+            gain_col,
+            F.lit(1).cast("long").alias("n_dups"),
+            F.col(id_col),
         )
-        if txn is not None:
-            done = [
-                r[_BUCKET]
-                for r in existing.filter(
-                    (F.col("_txn_run") == txn[0])
-                    & (F.col("_txn_epoch") == txn[1])
-                )
-                .select(_BUCKET)
-                .distinct()
-                .collect()
-            ]
-            if done:
-                touched = [b for b in touched if b not in done]
-                if not touched:
-                    return
-                merged_src = merged_src.filter(~F.col(_BUCKET).isin(done))
-                existing = existing.filter(~F.col(_BUCKET).isin(done))
-        merged_src = merged_src.unionByName(
-            existing.select(
-                by, cost_col, gain_col, id_col, "n_dups", _BUCKET
+    )
+    merge_partitions(
+        rows,
+        table_path,
+        _BUCKET,
+        lambda points: bucketed(
+            pareto_frontier(
+                points, by, cost_col, gain_col, id_col=id_col, dups_col="n_dups"
             )
-        )
-    frontier = pareto_frontier(
-        merged_src,
-        by,
-        cost_col,
-        gain_col,
-        id_col=id_col,
-        dups_col="n_dups",
-    ).withColumns(
-        {
-            _BUCKET: F.pmod(F.hash(by), F.lit(n_buckets)),
-            "_txn_run": F.lit(txn[0] if txn else None).cast("string"),
-            "_txn_epoch": F.lit(txn[1] if txn else None).cast("long"),
-        }
-    )
-    (
-        frontier.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(_BUCKET)
-        .parquet(table_path)
+        ),
+        txn,
     )
 
 
@@ -116,13 +75,10 @@ def stream_frontier(
     id_col: str,
     n_buckets: int = 16,
 ):
-    """Attach the frontier-maintenance sink and start it (availableNow)."""
+    """Attach the frontier-maintenance sink and start it
+    (``run_identity.start_sink``)."""
 
-    run_id = checkpoint_run_id(checkpoint)  # nonce-mixed: a recreated
-    # checkpoint gets a NEW identity, so epoch-0 restarts cannot
-    # collide with a previous run's replay stamps
-
-    def _sink(batch: DataFrame, epoch_id: int) -> None:
+    def _sink(batch: DataFrame, txn: Txn) -> None:
         upsert_frontier_batch(
             batch,
             table_path,
@@ -131,19 +87,12 @@ def stream_frontier(
             gain_col,
             id_col,
             n_buckets=n_buckets,
-            txn=(run_id, int(epoch_id)),
+            txn=txn,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_sink(stream, checkpoint, _sink)
 
 
 def read_frontier(spark, table_path: str) -> DataFrame:
     """The queryable frontier (helper columns dropped)."""
-    return spark.read.parquet(table_path).drop(
-        _BUCKET, "_txn_run", "_txn_epoch"
-    )
+    return spark.read.parquet(table_path).drop(_BUCKET, *STAMP_COLS)

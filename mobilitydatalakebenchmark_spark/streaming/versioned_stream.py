@@ -3,23 +3,20 @@ becomes one atomically-visible version, giving readers a consistent
 snapshot between epochs and readable history across them — the plain-
 parquet analogue of a Delta streaming sink.
 
-Replay protection differs from the id-carrying sinks (ANN/shards/flat):
-a versioned commit has no row identity to anti-join on, so idempotence
-comes from the TRANSACTION STAMP — ``commit(txn=(run, epoch))`` skips a
-transaction any manifest already records, closing the crash window
-between the data write and the manifest write (the data-dir overwrite
-reclaims the crashed attempt's orphan). As with the rollup sink, one
-checkpoint lineage owns a store: attaching a fresh checkpoint appends
-its batches as new versions by contract.
+Replay protection is the TRANSACTION STAMP (see ``run_identity.py``):
+``commit(txn=(run, epoch))`` skips a transaction any manifest already
+records, closing the crash window between the data write and the
+manifest write (the data-dir overwrite reclaims the crashed attempt's
+orphan). One checkpoint lineage owns a store: attaching a fresh
+checkpoint appends its batches as new versions by contract.
 """
 
 from __future__ import annotations
 
-
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from .run_identity import checkpoint_run_id
+from .run_identity import Txn, start_sink
 from ..operators.versioned_store import VersionedParquetStore
 
 
@@ -29,18 +26,8 @@ def stream_to_versioned_store(
     checkpoint: str,
     mode: str = "append",
 ) -> StreamingQuery:
-    run_id = checkpoint_run_id(checkpoint)  # nonce-mixed: a recreated
-    # checkpoint gets a NEW identity, so epoch-0 restarts cannot
-    # collide with a previous run's replay stamps
+    def flush(batch: DataFrame, txn: Txn) -> None:
+        if not batch.isEmpty():  # an empty batch would commit an empty version
+            store.commit(batch, mode=mode, txn=txn)
 
-    def flush(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        store.commit(batch, mode=mode, txn=(run_id, int(epoch_id)))
-
-    return (
-        stream.writeStream.foreachBatch(flush)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_sink(stream, checkpoint, flush)

@@ -95,25 +95,37 @@ def test_replayed_epoch_does_not_double_merge(spark, tmp_path):
     """The crash window: the partition overwrite committed but the
     checkpoint offset did not, so the same (run, epoch) batch arrives
     again. The txn stamp must skip every already-merged bucket; a
-    GENUINE new epoch carrying identical-looking data must still merge."""
+    GENUINE new epoch carrying identical-looking data must still merge.
+    Also over a table written before the stamp columns existed, whose
+    files lack them (they read as null: no bucket counts as merged)."""
     from mobilitydatalakebenchmark_spark.streaming.rollup_stream import (
         read_rollup,
         upsert_rollup_batch,
     )
 
-    table = str(tmp_path / "rollup")
     batch = spark.createDataFrame(_rows(0, 12, "a"), SCHEMA)
-    upsert_rollup_batch(batch, table, "ts", "value", keys=("k",), txn=("run1", 3))
-    first = _snapshot(read_rollup(spark, table).withColumn("vavg", F.lit(0)).drop("vavg"))
+    single = _snapshot(build_rollup(batch, "ts", "value", keys=("k",)))
+    for unstamped in (False, True):
+        table = str(tmp_path / f"rollup_{unstamped}")
+        if unstamped:
+            build_rollup(batch, "ts", "value", keys=("k",)).withColumn(
+                "bucket_key", F.date_format("bucket_ts", "yyyy-MM-dd_HH")
+            ).write.partitionBy("bucket_key").parquet(table)
+            assert "_txn_run" not in spark.read.parquet(table).columns
+        upsert_rollup_batch(batch, table, "ts", "value", keys=("k",), txn=("run1", 3))
+        first = _snapshot(read_rollup(spark, table))
+        assert {k: v[0] for k, v in first.items()} == {
+            k: (1 + unstamped) * v[0] for k, v in single.items()
+        }
 
-    # replay of the SAME epoch: no change
-    upsert_rollup_batch(batch, table, "ts", "value", keys=("k",), txn=("run1", 3))
-    assert _snapshot(read_rollup(spark, table)) == first
+        # replay of the SAME epoch: no change
+        upsert_rollup_batch(batch, table, "ts", "value", keys=("k",), txn=("run1", 3))
+        assert _snapshot(read_rollup(spark, table)) == first
 
-    # a genuinely new epoch with the same rows: merges (counts double)
-    upsert_rollup_batch(batch, table, "ts", "value", keys=("k",), txn=("run1", 4))
-    doubled = _snapshot(read_rollup(spark, table))
-    assert all(doubled[k][0] == 2 * first[k][0] for k in first)
+        # a genuinely new epoch with the same rows: merges (counts grow)
+        upsert_rollup_batch(batch, table, "ts", "value", keys=("k",), txn=("run1", 4))
+        grown = _snapshot(read_rollup(spark, table))
+        assert all(grown[k][0] == first[k][0] + single[k][0] for k in first)
 
 
 def test_stamped_table_still_equals_batch_rollup(spark, tmp_path):

@@ -7,6 +7,7 @@ tolerance (§2.9 note 9: feature order is unspecified)."""
 
 from __future__ import annotations
 
+import itertools
 import math
 
 import pytest
@@ -46,11 +47,20 @@ def store(tmp_path_factory, documents_df):
     return store
 
 
-def test_roundtrip_all_nonempty(spark, store, snapshots):
+@pytest.fixture(scope="module")
+def segmented_store(tmp_path_factory, documents_df):
+    """S14: rows sorted by uuid within each hour partition."""
+    path = str(tmp_path_factory.mktemp("flat_segmented") / "table")
+    store = FlatParquetStore(path, segment_by="uuid")
+    store.write(documents_df)
+    return store
+
+
+def test_roundtrip_all_nonempty(spark, store, segmented_store, snapshots):
     # probe a spread of snapshots incl. the bucket boundary and the dup-uuid one
     probes = [snapshots[0], snapshots[2], snapshots[-1], snapshots[len(snapshots) // 2]]
-    for ts, data in probes:
-        rows = store.get_document(ts).collect()
+    for (ts, data), s in itertools.product(probes, (store, segmented_store)):
+        rows = s.get_document(ts).collect()
         assert len(rows) == 1
         got = rows[0].asDict(recursive=True)
         assert got["timestamp"] == ts

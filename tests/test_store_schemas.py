@@ -1,9 +1,13 @@
-"""Schema drift guard: the read schema each store declares (schemas.py)
-must equal the schema parquet infers from what the store wrote, up to
+"""Schema drift guard: the read schema each store declares (schemas.py,
+or ``run_identity.stamped_schema`` for the streaming merge tables) must
+equal the schema parquet infers from what the store wrote, up to
 nullability. A declared schema that drifts from the writer would read
 wrong types or NULL columns instead of failing."""
 
 from __future__ import annotations
+
+import datetime as dt
+import os
 
 import pytest
 
@@ -22,6 +26,12 @@ from mobilitydatalakebenchmark_spark.operators.velocity_store import (
     VelocityParquetStore,
 )
 from mobilitydatalakebenchmark_spark.sources.geojson import write_snapshot_dir
+from mobilitydatalakebenchmark_spark.streaming import (
+    intervals,
+    rollup_stream,
+    run_identity,
+    skyline_stream,
+)
 from mobilitydatalakebenchmark_spark.streaming.ingest import (
     read_snapshot_stream,
     stream_to_flat_store,
@@ -45,6 +55,47 @@ TABLES = {
     "velocity_split/doc": schemas.VELOCITY_SPLIT_DOC_SCHEMA,
     "velocity_split/obs": schemas.VELOCITY_SPLIT_OBS_SCHEMA,
 }
+# streaming merge tables: their declared schema is taken from the rows
+# each merge_partitions call was given
+MERGE_TABLES = ("rollup", "frontier", "islands")
+
+
+@pytest.fixture(scope="module")
+def merge_lake(spark, tmp_path_factory):
+    """Two epochs into each merge table (the second reads the first back
+    with its declared schema); returns the root and the schema each
+    merge declared."""
+    root = tmp_path_factory.mktemp("merged")
+    declared = {}
+    merge = run_identity.merge_partitions
+
+    def spy(rows, table_path, bucket_col, combine, txn):
+        declared[os.path.basename(table_path)] = run_identity.stamped_schema(
+            rows.schema, bucket_col
+        )
+        merge(rows, table_path, bucket_col, combine, txn)
+
+    t0 = dt.datetime(2024, 4, 1, 10, 0, 0)
+    events = spark.createDataFrame(
+        [(t0 + dt.timedelta(minutes=25 * i), f"k{i % 3}", float(i), i, i + 5)
+         for i in range(8)],
+        "ts timestamp, k string, value double, start_us long, end_us long",
+    )
+    with pytest.MonkeyPatch.context() as mp:
+        for module in (rollup_stream, skyline_stream, intervals):
+            mp.setattr(module, "merge_partitions", spy)
+        for epoch in (0, 1):
+            txn = ("run", epoch)
+            rollup_stream.upsert_rollup_batch(
+                events, f"{root}/rollup", "ts", "value", keys=("k",), txn=txn,
+                distinct_col="k", quantiles=True,
+            )
+            skyline_stream.upsert_frontier_batch(
+                events, f"{root}/frontier", "k", "start_us", "value", "end_us",
+                txn=txn,
+            )
+            intervals.upsert_islands_batch(events, f"{root}/islands", "k", txn=txn)
+    return root, declared
 
 
 @pytest.fixture(scope="module")
@@ -72,8 +123,13 @@ def lake(spark, snapshots, documents_df, tmp_path_factory):
     return root
 
 
-@pytest.mark.parametrize("table", list(TABLES))
-def test_declared_schema_matches_written(spark, lake, table):
-    written = spark.read.parquet(f"{lake}/{table}").schema
+@pytest.mark.parametrize("table", list(TABLES) + list(MERGE_TABLES))
+def test_declared_schema_matches_written(spark, request, table):
+    if table in MERGE_TABLES:
+        root, declared = request.getfixturevalue("merge_lake")
+        schema = declared[table]
+    else:
+        root, schema = request.getfixturevalue("lake"), TABLES[table]
+    written = spark.read.parquet(f"{root}/{table}").schema
     # simpleString carries names, order and types but not nullability
-    assert TABLES[table].simpleString() == written.simpleString()
+    assert schema.simpleString() == written.simpleString()

@@ -10,6 +10,7 @@ from mobilitydatalakebenchmark_spark.operators.flat_store import (
     FlatParquetStore,
     renest_documents,
 )
+from mobilitydatalakebenchmark_spark.operators.maintenance import count_data_files
 from mobilitydatalakebenchmark_spark.sources.geojson import write_snapshot_dir
 from mobilitydatalakebenchmark_spark.streaming.ingest import (
     read_snapshot_stream,
@@ -93,7 +94,11 @@ def test_windowed_counts_memory_sink(spark, stream_dirs, snapshots):
 def test_fresh_checkpoint_replay_does_not_duplicate(spark, stream_dirs, snapshots):
     """A FRESH checkpoint re-delivers every snapshot file; the timestamp
     anti-membership must drop all of them instead of double-inserting
-    each snapshot's rows (round-6 idempotent-append contract)."""
+    each snapshot's rows (round-6 idempotent-append contract). The
+    fully replayed batch appends no part file either: the flush has no
+    emptiness probe, so an empty anti-join must write nothing."""
+    files_before = count_data_files(stream_dirs["table"])
+    assert files_before > 0
     q = stream_to_flat_store(
         read_snapshot_stream(spark, stream_dirs["data"]),
         stream_dirs["table"],
@@ -105,3 +110,4 @@ def test_fresh_checkpoint_replay_does_not_duplicate(spark, stream_dirs, snapshot
     flat = spark.read.parquet(stream_dirs["table"])
     n_features_expected = sum(len(d["features"]) for _, d in snapshots)
     assert flat.count() == n_features_expected
+    assert count_data_files(stream_dirs["table"]) == files_before
