@@ -256,10 +256,12 @@ def surrogate_key(order_col: str):
 
 
 # The within-range rank is read off monotonically_increasing_id, whose
-# row-offset field is 33 bits wide: a range holding >= 2^33 rows would
-# silently overflow into the partition-id bits and corrupt every rank
+# row-offset field is 33 bits wide: a range holding more than 2^33 rows
+# would silently overflow into the partition-id bits and corrupt every rank
 # after it. The per-range counts are collected anyway, so the guard is
-# free — raise instead of corrupting (r12 verdict item 2).
+# free — raise instead of corrupting. The bound is conservative by one
+# row: a range of exactly 2^33 rows (offsets up to 2^33 - 1) would
+# still fit, but is refused too.
 _MAX_RANGE_ROWS = 1 << 33
 
 
@@ -268,7 +270,7 @@ def _guard_range_counts(counts_by_range: dict) -> None:
     over = {r: c for r, c in counts_by_range.items() if c >= _MAX_RANGE_ROWS}
     if over:
         raise ValueError(
-            f"surrogate_keys/prefix_sums range(s) hold >= 2^33 rows {over}; "
+            f"surrogate_keys/grouped_surrogate_keys range(s) hold >= 2^33 rows {over}; "
             "monotonically_increasing_id's row offset would overflow — "
             "pass a larger num_ranges"
         )
