@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from .maintenance import count_data_files, exists
+from .maintenance import count_data_files, exists, recover_dir, replace_dir
 
 _BUCKETS = 32
 _BUCKET_COL = "_key_bucket"
@@ -84,6 +84,7 @@ class MaterializedJoin:
 
     def _read(self, spark: SparkSession, table: str) -> DataFrame:
         path = f"{self.path}/{table}.parquet"
+        recover_dir(spark, path)
         if count_data_files(path):
             return spark.read.parquet(path)
         # an EMPTY base/view write leaves no part files to infer a schema
@@ -320,19 +321,23 @@ class MaterializedJoin:
         """Fold tombstones into the data: rewrite each base and the view
         with masks applied, then drop the tombstone tables. Run when the
         mask's anti-join cost approaches a rewrite (the Delta OPTIMIZE
-        analogue)."""
+        analogue). Each table is swapped in by ``replace_dir``; masks are
+        idempotent, so every state between two swaps reads the same view."""
         import shutil
 
-        left = self._live(spark, "left").localCheckpoint(eager=True)
-        right = self._live(spark, "right").localCheckpoint(eager=True)
-        masked_view = self.view(spark).localCheckpoint(eager=True)
-        left.write.mode("overwrite").parquet(f"{self.path}/left.parquet")
-        right.write.mode("overwrite").parquet(f"{self.path}/right.parquet")
-        (
-            self._bucket(masked_view)
+        for side in ("left", "right"):
+            replace_dir(
+                spark,
+                f"{self.path}/{side}.parquet",
+                self._live(spark, side).write.mode("overwrite").parquet,
+            )
+        replace_dir(
+            spark,
+            f"{self.path}/view.parquet",
+            self._bucket(self.view(spark))
             .write.mode("overwrite")
             .partitionBy(_BUCKET_COL)
-            .parquet(f"{self.path}/view.parquet")
+            .parquet,
         )
         for side in ("left", "right"):
             shutil.rmtree(

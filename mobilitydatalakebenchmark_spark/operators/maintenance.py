@@ -4,17 +4,20 @@ A 20 s snapshot cadence writes ~4.3k files/day/partition-column into the
 flat store; small-file proliferation is the classic lake failure mode.
 
 - ``compact_partitions``: rewrite a partitioned table so each partition
-  holds ~target-sized files (read -> coalesce per partition -> atomic swap
-  via the Hadoop FileSystem API). Stats-preserving: same rows, same
+  holds ~target-sized files (read -> coalesce per partition -> swap
+  through ``replace_dir``). Stats-preserving: same rows, same
   partition column, fewer files.
 - ``expire_partitions``: retention — drop hour-bucket partitions older
   than a cutoff without touching surviving data (directory-level delete;
   no rewrite).
+- ``replace_dir`` / ``recover_dir``: the one crash-safe commit of a
+  whole directory, for every store that rewrites itself.
 """
 
 from __future__ import annotations
 
 import math
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,14 +40,54 @@ def exists(spark: SparkSession, path: str) -> bool:
     return fs.exists(jvm.org.apache.hadoop.fs.Path(path))
 
 
-def replace_dir(spark: SparkSession, tmp: str, dst: str) -> None:
-    """Swap a fully written ``tmp`` directory into ``dst``: delete, then
-    rename (Hadoop FileSystem API, so local FS and HDFS alike). Not
-    crash-safe: a crash between the two steps leaves only ``tmp``."""
+_PENDING, _REPLACED = "__pending", "__replaced"
+
+
+def _check(ok: bool, what: str) -> None:
+    # Hadoop reports a failed rename or delete by returning False
+    if not ok:
+        raise OSError(f"{what} failed")
+
+
+def recover_dir(spark: SparkSession, dst: str) -> None:
+    """Finish a ``replace_dir`` swap of ``dst`` that a crash cut short;
+    readers of swapped directories call this first (one ``exists`` call
+    on a clean store). An aside means the swap had begun, so pending was
+    complete: rename it in if ``dst`` is missing, then delete the aside.
+    A pending dir with no aside is an uncommitted write; the next write
+    overwrites it."""
     jvm, fs = _hadoop_fs(spark)
-    path = jvm.org.apache.hadoop.fs.Path(dst)
-    fs.delete(path, True)
-    fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), path)
+    Path = jvm.org.apache.hadoop.fs.Path
+    live, aside = Path(dst), Path(dst + _REPLACED)
+    if not fs.exists(aside):
+        return
+    if not fs.exists(live):
+        _check(fs.rename(Path(dst + _PENDING), live), f"rename into {dst}")
+    _check(fs.delete(aside, True), f"delete {dst + _REPLACED}")
+
+
+def replace_dir(spark: SparkSession, dst: str, write: Callable[[str], None]) -> None:
+    """Rewrite directory ``dst`` as one crash-safe commit (Hadoop FS API).
+
+    ``write(pending)`` overwrites the sibling ``dst__pending`` (e.g.
+    ``df.write.mode("overwrite").parquet``) and may read ``dst``. Then
+    ``dst`` is renamed aside to ``dst__replaced``, pending renamed in and
+    the aside deleted; a crash at any step leaves the old or the new
+    contents for ``recover_dir``. Recovery runs first: a Hadoop rename
+    onto an existing directory moves the source inside it. Single writer
+    per directory, since writers share the one pending name."""
+    recover_dir(spark, dst)
+    pending = dst + _PENDING
+    write(pending)
+    jvm, fs = _hadoop_fs(spark)
+    Path = jvm.org.apache.hadoop.fs.Path
+    live, aside = Path(dst), Path(dst + _REPLACED)
+    replaced = fs.exists(live)
+    if replaced:
+        _check(fs.rename(live, aside), f"rename {dst} aside")
+    _check(fs.rename(Path(pending), live), f"rename into {dst}")
+    if replaced:
+        _check(fs.delete(aside, True), f"delete {dst + _REPLACED}")
 
 
 def compact_partitions(
@@ -59,7 +102,7 @@ def compact_partitions(
     Per-partition output file count = ceil(partition_bytes / target); the
     rewrite repartitions by (partition_col, uniform salt) so each output
     task writes one file of its own partition. The rewrite lands in a
-    sibling directory first and is swapped in by ``replace_dir``.
+    pending sibling directory and is swapped in by ``replace_dir``.
 
     ``zorder=(x_col, y_col, x_range, y_range)`` additionally clusters
     every rewritten file by the 2-D Morton key (the Delta
@@ -68,6 +111,7 @@ def compact_partitions(
     per-column min/max envelope so later bbox filters skip row groups —
     compaction is exactly when that sort is free, since the data is
     being rewritten anyway."""
+    recover_dir(spark, path)
     total_bytes = dir_size(path)
     df = spark.read.parquet(path)
     n_parts = max(df.select(partition_col).distinct().count(), 1)
@@ -75,7 +119,6 @@ def compact_partitions(
     files_per_partition = max(1, math.ceil(per_partition / target_file_bytes))
 
     before_files = count_data_files(path)
-    tmp = path + "__compacting"
     if zorder is not None:
         # OPTIMIZE ... ZORDER BY semantics: RANGE-partition on the Morton
         # key (a salt would scatter each z-block uniformly over the
@@ -103,8 +146,9 @@ def compact_partitions(
                 files_per_partition,
             ),
         )
-    out.write.mode("overwrite").partitionBy(partition_col).parquet(tmp)
-    replace_dir(spark, tmp, path)
+    replace_dir(
+        spark, path, out.write.mode("overwrite").partitionBy(partition_col).parquet
+    )
     return {
         "files_before": before_files,
         "files_after": count_data_files(path),

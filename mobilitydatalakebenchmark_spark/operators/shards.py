@@ -25,6 +25,9 @@ one extra shuffle of (shard, n_tokens) short rows. The content hash uses
 ``md5(concat sorted ids)`` via a sort-within-group collect_list, bounded
 by the ids of one shard; at extreme shard sizes swap for the commutative
 xor-of-md5s (same guarantee, no list) — noted inline.
+
+Manifest writes swap through ``maintenance.replace_dir``: a reader sees
+the previous manifest or the new one, never a torn or missing one.
 """
 
 from __future__ import annotations
@@ -32,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .maintenance import exists
+from .maintenance import exists, recover_dir, replace_dir
 
 
 def _content_md5(id_col: str):
@@ -60,12 +63,20 @@ def _manifest_rows(df: DataFrame, source_col: str, id_col: str) -> DataFrame:
     )
 
 
-def _write_manifest(spark, new_manifest: DataFrame, path: str) -> None:
-    # materialize before overwriting the file the plan reads from
-    pdf = new_manifest.toPandas()
-    spark.createDataFrame(pdf, new_manifest.schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/manifest.parquet")
+def _read_manifest(spark, path: str) -> DataFrame | None:
+    """The committed manifest, or None before the first one."""
+    manifest = f"{path}/manifest.parquet"
+    recover_dir(spark, manifest)
+    return spark.read.parquet(manifest) if exists(spark, manifest) else None
+
+
+def _write_manifest(new_manifest: DataFrame, path: str) -> None:
+    # the plan may read the live manifest: it stays until the swap
+    replace_dir(
+        new_manifest.sparkSession,
+        f"{path}/manifest.parquet",
+        new_manifest.coalesce(1).write.mode("overwrite").parquet,
+    )
 
 
 def assign_shards(
@@ -128,10 +139,7 @@ def write_shards(
         .partitionBy("shard")
         .parquet(f"{path}/data.parquet")
     )
-    manifest = _manifest_rows(assigned, source_col, id_col)
-    manifest.coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/manifest.parquet"
-    )
+    _write_manifest(_manifest_rows(assigned, source_col, id_col), path)
 
 
 def append_shards(
@@ -161,14 +169,14 @@ def append_shards(
     TOUCHED shards are re-derived (partition-pruned read of just those
     shard directories — the content md5 is not mergeable, so touched
     shards recompute from data); untouched manifest rows are carried
-    over; the small manifest file is rewritten atomically last, which
+    over; the small manifest is swapped in last by ``replace_dir``, which
     also makes a crashed append detectable by ``verify_shards``."""
     spark = docs.sparkSession
     from .text_analysis import pack_sequences
 
-    manifest, prev = None, None
-    if exists(spark, f"{path}/manifest.parquet"):
-        manifest = spark.read.parquet(f"{path}/manifest.parquet")
+    prev = None
+    manifest = _read_manifest(spark, path)
+    if manifest is not None:
         # fill level keyed under the CALLER's source_col (the manifest
         # stores the canonical 'source') so the placement join below
         # works for any source_col
@@ -233,7 +241,7 @@ def append_shards(
         ).unionByName(recomputed)
     else:
         new_manifest = recomputed
-    _write_manifest(spark, new_manifest, path)
+    _write_manifest(new_manifest, path)
 
 
 def repair_manifest(
@@ -272,13 +280,12 @@ def repair_manifest(
         id_col,
     )
     new_manifest = recomputed
-    if exists(spark, f"{path}/manifest.parquet"):
-        new_manifest = (
-            spark.read.parquet(f"{path}/manifest.parquet")
-            .join(F.broadcast(touched), "shard", "left_anti")
-            .unionByName(recomputed)
-        )
-    _write_manifest(spark, new_manifest, path)
+    manifest = _read_manifest(spark, path)
+    if manifest is not None:
+        new_manifest = manifest.join(
+            F.broadcast(touched), "shard", "left_anti"
+        ).unionByName(recomputed)
+    _write_manifest(new_manifest, path)
 
 
 def verify_shards(
@@ -294,7 +301,9 @@ def verify_shards(
     from .text_analysis import token_count
 
     data = spark.read.parquet(f"{path}/data.parquet")
-    stored = spark.read.parquet(f"{path}/manifest.parquet")
+    manifest = f"{path}/manifest.parquet"
+    recover_dir(spark, manifest)
+    stored = spark.read.parquet(manifest)
     derived = (
         data.groupBy("shard")
         .agg(

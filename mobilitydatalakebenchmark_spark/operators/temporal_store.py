@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from ..functions.codecs import decode_direction
 from ..schemas import TEMPORAL_SCHEMA
 from .flat_store import explode_features, feature_collection
-from .maintenance import replace_dir
+from .maintenance import recover_dir, replace_dir
 
 _MEASURES = {
     # temporal column -> (source column, value cast)
@@ -108,6 +108,7 @@ class TemporalStore:
         build_temporal(documents).write.mode(mode).parquet(self.path)
 
     def scan(self, spark: SparkSession) -> DataFrame:
+        recover_dir(spark, self.path)
         return spark.read.schema(TEMPORAL_SCHEMA).parquet(self.path)
 
     def append_batch(self, spark: SparkSession, documents: DataFrame) -> None:
@@ -132,12 +133,10 @@ class TemporalStore:
             F.min_by("direction", "timerange.start").alias("direction"),
             F.min_by("lineId", "timerange.start").alias("lineId"),
         )
-        # Self-overwrite: materialize to a sibling path first (persist()
-        # is NOT a reliability barrier — an evicted cached partition would
-        # recompute against files the overwrite already deleted), then swap.
-        tmp_path = self.path + "__pending"
-        merged.write.mode("overwrite").parquet(tmp_path)
-        replace_dir(spark, tmp_path, self.path)
+        # Self-overwrite: write aside, then swap (persist() is NOT a
+        # reliability barrier — an evicted cached partition would
+        # recompute against files an in-place overwrite already deleted)
+        replace_dir(spark, self.path, merged.write.mode("overwrite").parquet)
 
     def total_size(self) -> int:
         from ..sources.size import dir_size

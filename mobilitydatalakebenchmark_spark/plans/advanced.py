@@ -2250,11 +2250,11 @@ def countmin_frequency_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(streaming/countmin_stream.py — previously pytest-only): the gate "
     "splits the events into three parquet files, streams them through "
     "stream_countmin as three file-source micro-batches "
-    "(maxFilesPerTrigger=1, availableNow) into the LATEST-pointer-"
+    "(maxFilesPerTrigger=1, availableNow) into the replace_dir-"
     "committed cell table with (run, epoch) replay stamps, reads the "
     "MAINTAINED table back and computes per-key estimates from it; the "
     "oracle recomputes cells + estimates from the raw events in one "
-    "batch pass, so any merge-associativity, replay-stamp or pointer-"
+    "batch pass, so any merge-associativity, replay-stamp or swap-"
     "commit defect in the incremental path flips a cell. CMS cells "
     "merge by addition, so arrival order cannot change the result; "
     "streaming state is the d*w sketch forever, regardless of stream "

@@ -252,3 +252,16 @@ TEMPORAL_SCHEMA = T.StructType(
         T.StructField("lineId", T.StringType()),
     ]
 )
+
+# A.5 Streaming Count-Min table (streaming/countmin_stream.py): d*w cells
+# stamped with the (run, epoch) of the merge that wrote them.
+
+COUNTMIN_SCHEMA = T.StructType(
+    [
+        T.StructField("r", T.IntegerType()),
+        T.StructField("b", T.LongType()),
+        T.StructField("cell", T.LongType()),
+        T.StructField("_txn_run", T.StringType()),
+        T.StructField("_txn_epoch", T.LongType()),
+    ]
+)

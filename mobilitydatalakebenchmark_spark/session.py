@@ -158,27 +158,3 @@ def read_table(spark: SparkSession, sf_dir: str, name: str, heavy: bool = False)
         if size < _SMALL_SCAN_BYTES:
             df = df.repartition(spark.sparkContext.defaultParallelism)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, tables: list[str] | None = None):
-    """Register the driver test tables (TESTDATA.md) as temp views and
-    return them as a dict of DataFrames. Parquet scans: pushdown + pruning
-    are automatic."""
-    names = tables or [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]
-    out = {}
-    for name in names:
-        df = read_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

@@ -10,9 +10,10 @@ poller writes one snapshot per 20 s over a 4 h window
   an empty snapshot, an intra-snapshot duplicate uuid, bbox-edge coords.
 - ``write_snapshot_dir``    — materialize the stream as the reference's
   on-disk layout (one JSON file per snapshot).
-- ``read_snapshot_dir``     — Spark scan of that layout into the canonical
+- ``snapshot_documents``    — Spark scan of that layout into the canonical
   document DataFrame: explicit schema (no inference), filename-derived
-  timestamp key, ordered, limited.
+  timestamp key; batch or streaming reader.
+- ``read_snapshot_dir``     — the batch scan, ordered, limited.
 
 Scale note: a real deployment reads millions of small JSON files; the Spark
 reader parallelizes over files and the explicit schema avoids a schema-
@@ -125,18 +126,18 @@ def write_snapshot_dir(snapshots: list[tuple[str, dict]], path: str) -> None:
             json.dump(data, fh)
 
 
-def read_snapshot_dir(
-    spark: SparkSession, path: str, max_documents: int | None = None
-) -> DataFrame:
-    """S1: scan a snapshot directory into the document DataFrame
-    (timestamp string, data struct), ordered by timestamp, limited.
+def snapshot_documents(reader, path: str, **options: str) -> DataFrame:
+    """The snapshot files under ``path`` as the document DataFrame
+    (timestamp string, data struct), through a batch (``spark.read``) or
+    streaming (``spark.readStream``) reader with extra reader ``options``.
 
     ``multiLine=true`` because each file is one JSON object; the timestamp
     key is the filename stem (reference ``benchmark.py:38-39``).
     """
-    df = (
-        spark.read.schema(FEATURE_COLLECTION_SCHEMA)
+    return (
+        reader.schema(FEATURE_COLLECTION_SCHEMA)
         .option("multiLine", "true")
+        .options(**options)
         .json(path)
         .withColumn(
             "timestamp",
@@ -144,12 +145,16 @@ def read_snapshot_dir(
                 F.regexp_extract(F.input_file_name(), r"([^/]+)\.json$", 1), "_", ":"
             ),
         )
-        .select(
-            "timestamp",
-            F.struct("type", "features").alias("data"),
-        )
-        .orderBy("timestamp")
+        .select("timestamp", F.struct("type", "features").alias("data"))
     )
+
+
+def read_snapshot_dir(
+    spark: SparkSession, path: str, max_documents: int | None = None
+) -> DataFrame:
+    """S1: scan a snapshot directory into the document DataFrame,
+    ordered by timestamp, limited."""
+    df = snapshot_documents(spark.read, path).orderBy("timestamp")
     if max_documents is not None:
         df = df.limit(max_documents)
     return df

@@ -14,63 +14,31 @@ Idempotence is the txn stamp of ``run_identity.py``: every stored row
 carries the (run, epoch) stamp of the merge that wrote it, and a
 replayed epoch whose stamp already matches is a no-op.
 
-Crash safety follows the versioned-store manifest discipline: each
-merge writes the WHOLE merged table to a FRESH ``cells-<n>/`` dir under
-``table_path`` and then swaps a one-line ``LATEST`` pointer file via
-write-to-tmp + ``os.replace`` (atomic on POSIX). A crash anywhere
-before the pointer swap leaves the previous sketch fully intact — an
-in-place ``mode("overwrite")`` to a single dir would delete ALL
-previously merged epochs at job start, and replay only redelivers the
-last epoch, so the state would be unrecoverable. Superseded dirs are
-pruned after the swap (current + previous kept), so the store holds at
-most 2 sketch-sized dirs.
+Crash safety is ``maintenance.replace_dir``: each merge writes the
+WHOLE merged table to the pending sibling of ``table_path`` and swaps it
+in, so a crash anywhere before the swap leaves the previous sketch fully
+intact. An in-place ``mode("overwrite")`` would delete ALL previously
+merged epochs at job start, and replay only redelivers the last epoch,
+so the state would be unrecoverable.
 """
 
 from __future__ import annotations
 
-import os
-import re
-import shutil
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from .run_identity import Txn, start_sink
 from ..operators.countmin import countmin_build
+from ..operators.maintenance import exists, recover_dir, replace_dir
+from ..schemas import COUNTMIN_SCHEMA
 
-_POINTER = "LATEST"
-_CELLS_DIR = re.compile(r"cells-(\d+)")
 
-
-def _latest_cells_dir(table_path: str) -> str | None:
-    """The committed cell dir per the pointer file, or None if no merge
+def _committed_cells(spark: SparkSession, table_path: str) -> DataFrame | None:
+    """The committed cell table with its txn stamps, or None if no merge
     has ever committed."""
-    ptr = os.path.join(table_path, _POINTER)
-    if not os.path.isfile(ptr):
+    recover_dir(spark, table_path)
+    if not exists(spark, table_path):
         return None
-    with open(ptr) as fh:
-        name = fh.read().strip()
-    full = os.path.join(table_path, name)
-    return full if name and os.path.isdir(full) else None
-
-
-def _commit_cells_dir(table_path: str, name: str) -> None:
-    """Point LATEST at ``name`` atomically, then prune dirs older than
-    the one just superseded (crash between swap and prune only leaves an
-    extra bounded-size dir, never a torn table)."""
-    import uuid
-
-    ptr = os.path.join(table_path, _POINTER)
-    tmp = ptr + f".{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as fh:
-        fh.write(name)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, ptr)
-    seq = int(name.rsplit("-", 1)[1])
-    for entry in os.listdir(table_path):
-        m = _CELLS_DIR.fullmatch(entry)
-        if m and int(m.group(1)) < seq - 1:  # keep current + predecessor
-            shutil.rmtree(os.path.join(table_path, entry), ignore_errors=True)
+    return spark.read.schema(COUNTMIN_SCHEMA).parquet(table_path)
 
 
 def upsert_countmin_batch(
@@ -89,23 +57,14 @@ def upsert_countmin_batch(
         return
     new_cells = countmin_build(batch, key_col, d=d, w=w)
     merged = {}
-    os.makedirs(table_path, exist_ok=True)
-    current = _latest_cells_dir(table_path)
-    seq = 0
-    if current is not None:
-        seq = int(os.path.basename(current).rsplit("-", 1)[1]) + 1
-        existing = spark.read.parquet(current)
-        if txn is not None:
-            already = (
-                existing.filter(
-                    (existing["_txn_run"] == txn[0])
-                    & (existing["_txn_epoch"] == txn[1])
-                ).count()
-                > 0
-            )
-            if already:  # replayed epoch: this merge is in the table
-                return
-        for r in existing.collect():  # d*w rows — sketch-sized, bounded
+    existing = _committed_cells(spark, table_path)
+    if existing is not None:
+        stored = existing.collect()  # d*w rows — sketch-sized, bounded
+        if txn is not None and any(
+            r["_txn_run"] == txn[0] and r["_txn_epoch"] == txn[1] for r in stored
+        ):
+            return  # replayed epoch: this merge is in the table
+        for r in stored:
             merged[(r["r"], r["b"])] = r["cell"]
     for r in new_cells.collect():  # batch's cells — also <= d*w rows
         k = (r["r"], r["b"])
@@ -115,17 +74,8 @@ def upsert_countmin_batch(
         (int(r), int(b), int(c), run_id, epoch)
         for (r, b), c in sorted(merged.items())
     ]
-    name = f"cells-{seq}"
-    target = os.path.join(table_path, name)
-    # clear an orphan from a crash before the pointer swap — LATEST never
-    # referenced it (a failure to clear surfaces in the write below)
-    shutil.rmtree(target, ignore_errors=True)
-    local_df(
-        spark,
-        rows,
-        "r int, b long, cell long, _txn_run string, _txn_epoch long",
-    ).coalesce(1).write.mode("error").parquet(target)
-    _commit_cells_dir(table_path, name)
+    cells = local_df(spark, rows, COUNTMIN_SCHEMA.simpleString()).coalesce(1)
+    replace_dir(spark, table_path, cells.write.mode("overwrite").parquet)
 
 
 def stream_countmin(
@@ -146,10 +96,9 @@ def stream_countmin(
 
 def read_countmin(spark, table_path: str) -> DataFrame:
     """The queryable cell table (txn stamps dropped) — feed straight
-    into operators/countmin.countmin_estimates. Reads ONLY the dir the
-    LATEST pointer commits; in-flight and orphaned merge dirs are
-    invisible."""
-    current = _latest_cells_dir(table_path)
-    if current is None:
+    into operators/countmin.countmin_estimates. A merge cut short before
+    its swap is invisible."""
+    cells = _committed_cells(spark, table_path)
+    if cells is None:
         raise FileNotFoundError(f"no committed count-min table under {table_path}")
-    return spark.read.parquet(current).select("r", "b", "cell")
+    return cells.select("r", "b", "cell")

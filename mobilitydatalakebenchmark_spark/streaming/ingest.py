@@ -31,27 +31,17 @@ from .run_identity import Txn, start_sink
 from ..operators.flat_store import explode_features
 from ..operators.maintenance import exists
 from ..functions.codecs import ts_bucket
-from ..schemas import FEATURE_COLLECTION_SCHEMA, FLAT_STORE_SCHEMA, TS_BUCKET_COL
+from ..schemas import FLAT_STORE_SCHEMA, TS_BUCKET_COL
+from ..sources.geojson import snapshot_documents
 
 
 def read_snapshot_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int = 64
 ) -> DataFrame:
-    """Streaming S1: the snapshot directory as a file-source stream.
-    Schema is explicit (no inference pre-pass); the timestamp key comes
-    from the filename exactly as in the batch reader."""
-    return (
-        spark.readStream.schema(FEATURE_COLLECTION_SCHEMA)
-        .option("multiLine", "true")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .json(path)
-        .withColumn(
-            "timestamp",
-            F.translate(
-                F.regexp_extract(F.input_file_name(), r"([^/]+)\.json$", 1), "_", ":"
-            ),
-        )
-        .select("timestamp", F.struct("type", "features").alias("data"))
+    """Streaming S1: the snapshot directory as a file-source stream,
+    read exactly as the batch reader reads it."""
+    return snapshot_documents(
+        spark.readStream, path, maxFilesPerTrigger=str(max_files_per_trigger)
     )
 
 

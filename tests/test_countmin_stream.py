@@ -88,27 +88,19 @@ def test_recreated_checkpoint_applies_fresh_data(spark, tmp_path):
     assert total == D * 100  # nothing dropped by a stale replay stamp
 
 
-def test_crash_before_pointer_swap_preserves_state(spark, tmp_path):
-    """The merge commits via LATEST-pointer swap: an orphan cells dir
-    from a crash between data write and pointer swap must (a) leave the
-    previous sketch fully readable and (b) not block the replayed
+def test_crash_before_swap_preserves_state(spark, tmp_path):
+    """The merge commits via ``maintenance.replace_dir``: an orphan
+    pending dir from a crash between data write and swap must (a) leave
+    the previous sketch fully readable and (b) not block the replayed
     merge."""
-    import os
-
     table = str(tmp_path / "cms")
     b0 = spark.range(0, 100).select((F.col("id") % 7).alias("k"))
     upsert_countmin_batch(b0, table, "k", d=D, w=W, txn=("run", 0))
     before = _cells(read_countmin(spark, table))
-    # simulate the crash window: the NEXT merge's dir exists on disk but
-    # LATEST was never swapped to it
+    # simulate the crash window: the NEXT merge's pending dir exists on
+    # disk but was never swapped in
     b1 = spark.range(100, 160).select((F.col("id") % 7).alias("k"))
-    from mobilitydatalakebenchmark_spark.operators.countmin import (
-        countmin_build,
-    )
-
-    countmin_build(b1, "k", d=D, w=W).write.parquet(
-        os.path.join(table, "cells-1")
-    )
+    countmin_build(b1, "k", d=D, w=W).write.parquet(table + "__pending")
     assert _cells(read_countmin(spark, table)) == before  # orphan invisible
     # replay of the crashed epoch: merges cleanly over the orphan
     upsert_countmin_batch(b1, table, "k", d=D, w=W, txn=("run", 1))

@@ -1,15 +1,23 @@
-"""Compaction (fewer files, identical rows) and retention expiry."""
+"""Compaction (fewer files, identical rows), retention expiry, and the
+crash safety of the one directory commit, ``replace_dir``."""
 
 from __future__ import annotations
 
+import os
+from functools import reduce
+
+import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mobilitydatalakebenchmark_spark.functions.codecs import ts_bucket
+from mobilitydatalakebenchmark_spark.operators import maintenance
 from mobilitydatalakebenchmark_spark.operators.flat_store import explode_features
 from mobilitydatalakebenchmark_spark.operators.maintenance import (
     compact_partitions,
     expire_partitions,
 )
+from mobilitydatalakebenchmark_spark.operators.temporal_store import TemporalStore
 from mobilitydatalakebenchmark_spark.schemas import TS_BUCKET_COL
 
 
@@ -115,3 +123,120 @@ def test_compaction_with_zorder_clusters_files(spark, tmp_path):
     # plain rewrite produces (ragged z-boundaries keep this short of the
     # ideal 1/F, hence the conservative 1/3 bound)
     assert avg_file_area(path) < avg_file_area(plain_path) / 3
+
+
+# snapshot indices: the stored state, the batch whose append crashes and
+# the batch appended after the crash (none of them the empty snapshot or
+# the one with a duplicate uuid, so every uuid set reads back exactly)
+_OLD, _BATCH, _NEXT = (0, 1), (3, 4), (6,)
+
+
+class _Crash(Exception):
+    pass
+
+
+class _FaultyFS:
+    """The real Hadoop FileSystem, except that the ``nth`` call of ``op``
+    fails: it raises before doing the call, or does it and then raises,
+    or returns False without doing it."""
+
+    def __init__(self, fs, op: str, nth: int, mode: str):
+        self._fs, self._op, self._nth, self._mode = fs, op, nth, mode
+        self._calls = 0
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+    def _call(self, name, *args):
+        call = getattr(self._fs, name)
+        if name == self._op:
+            self._calls += 1
+            if self._calls == self._nth:
+                if self._mode == "false":
+                    return False
+                if self._mode == "after":
+                    call(*args)
+                raise _Crash(f"{name} #{self._nth} {self._mode}")
+        return call(*args)
+
+    def rename(self, *args):
+        return self._call("rename", *args)
+
+    def delete(self, *args):
+        return self._call("delete", *args)
+
+
+def _docs(documents_df, indices, snapshots):
+    return documents_df.filter(
+        F.col("timestamp").isin([snapshots[i][0] for i in indices])
+    )
+
+
+def _sizes(spark, store):
+    rows = store.scan(spark).select("uuid", F.size("distance")).collect()
+    return dict(map(tuple, rows))
+
+
+@pytest.fixture(scope="module")
+def one_shot_sizes(spark, tmp_path_factory, documents_df, snapshots):
+    """Per-uuid instant counts of a one-shot write of each state the
+    crashed store can be in, plus the batch appended after the crash."""
+    out = {}
+    for state, indices in (("old", _OLD), ("new", _OLD + _BATCH)):
+        store = TemporalStore(str(tmp_path_factory.mktemp(state) / "t"))
+        store.write(_docs(documents_df, indices + _NEXT, snapshots))
+        out[state] = _sizes(spark, store)
+    return out
+
+
+# (op, nth call, mode) -> the state a reader sees after the crash. The
+# swap's FS calls in order: rename dst aside, rename pending in, delete
+# the aside.
+_FAULTS = {
+    "after_pending_write": (("rename", 1, "before"), "old"),
+    "after_rename_aside": (("rename", 1, "after"), "new"),
+    "after_rename_in": (("rename", 2, "after"), "new"),
+    "before_delete_aside": (("delete", 1, "before"), "new"),
+    "rename_aside_returns_false": (("rename", 1, "false"), "old"),
+    "rename_in_returns_false": (("rename", 2, "false"), "new"),
+    "delete_aside_returns_false": (("delete", 1, "false"), "new"),
+}
+
+
+@pytest.mark.parametrize("fault", list(_FAULTS))
+def test_replace_dir_survives_a_crash_at_every_step(
+    spark, tmp_path, documents_df, snapshots, one_shot_sizes, fault
+):
+    (op, nth, mode), state = _FAULTS[fault]
+    store = TemporalStore(str(tmp_path / "t"))
+    store.write(_docs(documents_df, _OLD, snapshots))
+    jvm, fs = maintenance._hadoop_fs(spark)
+    faulty = _FaultyFS(fs, op, nth, mode)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(maintenance, "_hadoop_fs", lambda _spark: (jvm, faulty))
+        with pytest.raises(OSError if mode == "false" else _Crash):
+            store.append_batch(spark, _docs(documents_df, _BATCH, snapshots))
+
+    # every snapshot of exactly one state reads back
+    stamps = [snapshots[i][0] for i in _OLD + _BATCH]
+    rows = reduce(
+        DataFrame.unionByName,
+        [store.get_document(spark, ts) for ts in stamps],
+    ).collect()
+    got = {
+        r["timestamp"]: sorted(f["properties"]["uuid"] for f in r["data"]["features"])
+        for r in rows
+    }
+    want_indices = _OLD if state == "old" else _OLD + _BATCH
+    want = {
+        snapshots[i][0]: sorted(f["properties"]["uuid"] for f in snapshots[i][1]["features"])
+        for i in want_indices
+    }
+    assert got == want
+
+    # the store keeps working: a following append merges like a one-shot write
+    store.append_batch(spark, _docs(documents_df, _NEXT, snapshots))
+    assert _sizes(spark, store) == one_shot_sizes[state]
+    # nothing left beside or inside the store
+    assert os.listdir(tmp_path) == ["t"]
+    assert not [e for e in os.scandir(tmp_path / "t") if e.is_dir()]

@@ -27,6 +27,7 @@ from mobilitydatalakebenchmark_spark.operators.velocity_store import (
 )
 from mobilitydatalakebenchmark_spark.sources.geojson import write_snapshot_dir
 from mobilitydatalakebenchmark_spark.streaming import (
+    countmin_stream,
     intervals,
     rollup_stream,
     run_identity,
@@ -54,6 +55,7 @@ TABLES = {
     "cantor_unpacked": schemas.cantor_schema(packed=False),
     "velocity_split/doc": schemas.VELOCITY_SPLIT_DOC_SCHEMA,
     "velocity_split/obs": schemas.VELOCITY_SPLIT_OBS_SCHEMA,
+    "countmin": schemas.COUNTMIN_SCHEMA,
 }
 # streaming merge tables: their declared schema is taken from the rows
 # each merge_partitions call was given
@@ -113,6 +115,9 @@ def lake(spark, snapshots, documents_df, tmp_path_factory):
     CantorParquetStore(f"{root}/cantor").write(docs)
     CantorParquetStore(f"{root}/cantor_unpacked", packed=False).write(docs)
     VelocitySplitParquetStore(f"{root}/velocity_split").write(docs)
+    countmin_stream.upsert_countmin_batch(
+        spark.range(50), f"{root}/countmin", "id", txn=("run", 0)
+    )
     write_snapshot_dir(sorted(snapshots)[:8], f"{root}/landing")
     query = stream_to_flat_store(
         read_snapshot_stream(spark, f"{root}/landing"),
