@@ -14,6 +14,8 @@ import pandas as pd  # module-global: pandas_udf resolves stringized hints here
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..schemas import TS_BUCKET_LEN
+
 # -- P6: direction ±1 involution (apache_parquet.py:35 / citus_store.py:121)
 
 
@@ -30,11 +32,11 @@ def decode_direction(stored: Column) -> Column:
 # -- P7/W1: timestamp bucketing (apache_parquet.py:17,27,107)
 
 
-def ts_bucket(timestamp: Column, length: int = 13) -> Column:
-    """Prefix bucket of the ISO timestamp string; 13 = hour granularity.
-    Used as the partition column -> Spark partition pruning replaces the
-    reference's filename arithmetic (F7)."""
-    return F.substring(timestamp, 1, length)
+def ts_bucket(timestamp: Column) -> Column:
+    """Hour bucket of the ISO timestamp string (its ``TS_BUCKET_LEN``-char
+    prefix). Used as the partition column -> Spark partition pruning
+    replaces the reference's filename arithmetic (F7)."""
+    return F.substring(timestamp, 1, TS_BUCKET_LEN)
 
 
 # -- P8: ISO timestamp parse

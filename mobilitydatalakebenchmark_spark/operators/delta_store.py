@@ -1,33 +1,9 @@
 """Delta Lake store variants (S5/S6 append+filtered-scan, J9/W4 MERGE).
 
 Reference: ``stores/delta_lake.py:20-40`` (the one store the reference
-already implements on Spark). The v1 image ships no delta-spark jars, so
-every entry point degrades with a clear DeltaUnavailable error; the code
-paths are written for when the package is present (``pip install
-delta-spark`` + the two session configs in ``delta_session_builder``).
-
-Enablement re-checked 2026-08-13 (round 3): no ``delta`` module, no
-delta jars under ``/opt/spark/jars``, and ``pip download delta-spark``
-finds no distribution (the image has no package index access).
-Re-checked again 2026-08-15 (round 8): still no ``delta`` module, no
-delta jar anywhere on the filesystem (``find / -name 'delta-*.jar'``),
-none under pyspark's bundled jars. Blocked
-by the environment, not the code — nothing to un-gate until the image
-ships the jars.
-
-Final re-probe 2026-08-14 (round 4): still no ``delta`` module and zero
-delta jars under pyspark's jar dir. Declared closed as environment-gated;
-no further rounds will be spent on it.
-
-Round-9 re-probe 2026-08-15: unchanged — no ``delta`` module, no jar
-under pyspark's bundled jars, no ``~/.ivy2`` cache, and ``pip download
-delta-spark`` cannot resolve any index (DNS failure: the image has no
-network). The 1 pytest skip stays environment-gated.
-
-Round-10 re-probe 2026-08-16: unchanged — ``import delta`` fails, no
-``~/.ivy2/jars``, and a filesystem-wide ``find`` for
-``delta-spark*.jar`` / ``delta-core*.jar`` returns nothing. Still
-environment-gated.
+already implements on Spark), written for a session with the delta-spark
+jars and the two configs of ``delta_session_builder``. Without the jars
+every entry point raises ``DeltaUnavailable``.
 
 Without Delta, the same upsert semantics run on plain parquet via the
 recompute path (see VelocityParquetStore.write(mode="append") and

@@ -26,17 +26,14 @@ from ..functions.codecs import (
     elegant_unpair,
     encode_fixed_point,
     pack_le_bytes,
-    ts_bucket,
     unpack_le_bytes,
 )
 from ..schemas import (
-    TS_BUCKET_COL,
-    TS_BUCKET_LEN,
     VELOCITY_SPLIT_DOC_SCHEMA,
     VELOCITY_SPLIT_OBS_SCHEMA,
     cantor_schema,
 )
-from .flat_store import explode_features, renest_documents
+from .flat_store import at_snapshot, explode_features, renest_documents, write_bucketed
 
 
 class CantorParquetStore:
@@ -59,17 +56,10 @@ class CantorParquetStore:
             offset=0,
         )
         coord_col = pack_le_bytes(pair) if self.packed else pair
-        encoded = flat.withColumns(
-            {
-                "coords_paired": coord_col,
-                TS_BUCKET_COL: ts_bucket(F.col("timestamp")),
-            }
-        ).drop("coordinates_0", "coordinates_1")
-        (
-            encoded.write.mode(mode)
-            .partitionBy(TS_BUCKET_COL)
-            .parquet(self.path)
+        encoded = flat.withColumn("coords_paired", coord_col).drop(
+            "coordinates_0", "coordinates_1"
         )
+        write_bucketed(encoded, self.path, mode)
 
     def scan_decoded(self, spark: SparkSession) -> DataFrame:
         df = spark.read.schema(cantor_schema(self.packed)).parquet(self.path)
@@ -87,11 +77,7 @@ class CantorParquetStore:
         ).drop("coords_paired")
 
     def get_document(self, spark: SparkSession, timestamp: str) -> DataFrame:
-        flat = self.scan_decoded(spark).filter(
-            (F.col(TS_BUCKET_COL) == timestamp[:TS_BUCKET_LEN])
-            & (F.col("timestamp") == timestamp)
-        )
-        return renest_documents(flat)
+        return renest_documents(at_snapshot(self.scan_decoded(spark), timestamp))
 
     def total_size(self) -> int:
         from ..sources.size import dir_size
@@ -127,13 +113,12 @@ class VelocitySplitParquetStore:
                     "lat_fp": encode_fixed_point(
                         F.col("coordinates_1").cast("double"), F.col("min_lat")
                     ),
-                    TS_BUCKET_COL: ts_bucket(F.col("timestamp")),
                 }
             )
             .drop("coordinates_0", "coordinates_1", "min_lon", "min_lat")
         )
         zone.write.mode(mode).parquet(self._p("doc"))
-        obs.write.mode(mode).partitionBy(TS_BUCKET_COL).parquet(self._p("obs"))
+        write_bucketed(obs, self._p("obs"), mode)
 
     def get_document(self, spark: SparkSession, timestamp: str) -> DataFrame:
         zone = (
@@ -141,9 +126,8 @@ class VelocitySplitParquetStore:
             .parquet(self._p("doc"))
             .filter(F.col("timestamp") == timestamp)
         )
-        obs = spark.read.schema(VELOCITY_SPLIT_OBS_SCHEMA).parquet(self._p("obs")).filter(
-            (F.col(TS_BUCKET_COL) == timestamp[:TS_BUCKET_LEN])
-            & (F.col("timestamp") == timestamp)
+        obs = at_snapshot(
+            spark.read.schema(VELOCITY_SPLIT_OBS_SCHEMA).parquet(self._p("obs")), timestamp
         )
         flat = (
             obs.join(F.broadcast(zone), "timestamp")

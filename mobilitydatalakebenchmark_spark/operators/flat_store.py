@@ -83,28 +83,66 @@ def feature_collection(features: Column) -> Column:
     ).alias("data")
 
 
-def renest_documents(flat: DataFrame) -> DataFrame:
+def renest_documents(flat: DataFrame, snapshots: DataFrame | None = None) -> DataFrame:
     """P3: flat observations -> (timestamp, data) FeatureCollection rows.
     Feature order within a document is unspecified in the reference
-    (§2.9 note 9); we sort by uuid for determinism."""
-    return (
-        flat.groupBy("timestamp")
-        .agg(F.sort_array(F.collect_list(feature_struct())).alias("_features"))
-        .select("timestamp", feature_collection(F.col("_features")))
+    (§2.9 note 9); we sort by uuid for determinism.
+
+    Without ``snapshots`` a document exists where rows exist. With it (a
+    frame with a ``timestamp`` column) there is exactly one document per
+    timestamp in ``snapshots``, with ``features == []`` where no row
+    matches, and none for a timestamp it does not hold: the snapshot keys
+    are unioned in as feature-less rows flagged as known, so the same one
+    aggregate decides existence, with no join."""
+    rows = flat.select("timestamp", feature_struct().alias("f"))
+    aggs = [F.sort_array(F.collect_list("f")).alias("features")]
+    if snapshots is not None:
+        keys = snapshots.select(
+            "timestamp",
+            F.lit(None).cast(rows.schema["f"].dataType).alias("f"),
+            F.lit(True).alias("known"),
+        )
+        rows = rows.withColumn("known", F.lit(False)).unionByName(keys)
+        aggs.append(F.bool_or("known").alias("known"))
+    docs = rows.groupBy("timestamp").agg(*aggs)
+    if snapshots is not None:
+        docs = docs.filter("known")
+    return docs.select("timestamp", feature_collection(F.col("features")))
+
+
+def write_bucketed(rows: DataFrame, path: str, mode: str) -> None:
+    """S3: the one write of an observation table — rows keyed by snapshot
+    ``timestamp``, partitioned on its hour bucket (the reference's
+    one-file-per-hour layout, ``apache_parquet.py:17,27``)."""
+    (
+        rows.withColumn(TS_BUCKET_COL, ts_bucket(F.col("timestamp")))
+        .write.mode(mode)
+        .partitionBy(TS_BUCKET_COL)
+        .parquet(path)
+    )
+
+
+def at_snapshot(table: DataFrame, timestamp: str) -> DataFrame:
+    """S4+F7: the rows of one snapshot in a ``write_bucketed`` table. The
+    bucket equality prunes to one partition; the timestamp equality is
+    pushed into the parquet scan (row-group stats skip)."""
+    return table.filter(
+        (F.col(TS_BUCKET_COL) == timestamp[:TS_BUCKET_LEN])
+        & (F.col("timestamp") == timestamp)
     )
 
 
 class FlatParquetStore:
     """End-to-end store: documents -> partitioned parquet -> point lookups.
 
-    write: S3 (partitionBy hour bucket, the session's snappy default);
-    read: S4+F7 (partition pruning + parquet predicate pushdown);
+    write: S3 (``write_bucketed``, the session's snappy default);
+    read: S4+F7 (``at_snapshot``);
     reconstruct: P3.
     """
 
     def __init__(self, path: str, segment_by: str | None = None):
-        """segment_by: sort rows within each partition by this column before
-        writing (S14 — TimescaleDB's compress_segmentby='uuid',
+        """segment_by: sort rows within each hour partition by this column,
+        then timestamp (S14 — TimescaleDB's compress_segmentby='uuid',
         timescaledb_store.py:63-64): co-locates each entity's rows inside
         the parquet row groups, improving both compression (runs of equal
         values dictionary-encode) and per-entity read locality."""
@@ -112,24 +150,20 @@ class FlatParquetStore:
         self.segment_by = segment_by
 
     def write(self, documents: DataFrame, mode: str = "overwrite") -> None:
-        flat = explode_features(documents).withColumn(
-            TS_BUCKET_COL, ts_bucket(F.col("timestamp"))
-        )
+        flat = explode_features(documents)
         if self.segment_by:
-            flat = flat.sortWithinPartitions(self.segment_by, "timestamp")
-        flat.write.mode(mode).partitionBy(TS_BUCKET_COL).parquet(self.path)
+            # lead with the bucket: the partitioned write sorts each task
+            # on it and drops any earlier local sort that does not
+            flat = flat.sortWithinPartitions(
+                ts_bucket(F.col("timestamp")), self.segment_by, "timestamp"
+            )
+        write_bucketed(flat, self.path, mode)
 
     def scan(self) -> DataFrame:
         return SparkSession.active().read.schema(FLAT_STORE_SCHEMA).parquet(self.path)
 
     def get_document(self, timestamp: str) -> DataFrame:
-        """Point lookup: ts_bucket partition pruning happens automatically
-        because the bucket is a prefix-function of the timestamp literal."""
-        flat = self.scan().filter(
-            (F.col(TS_BUCKET_COL) == timestamp[:TS_BUCKET_LEN])
-            & (F.col("timestamp") == timestamp)
-        )
-        return renest_documents(flat)
+        return renest_documents(at_snapshot(self.scan(), timestamp))
 
     def total_size(self) -> int:
         from ..sources.size import dir_size

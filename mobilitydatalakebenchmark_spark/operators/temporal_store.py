@@ -8,15 +8,18 @@ sequences + tsrange validity window).
 Spark model (SURVEY.md §1.4): a temporal column is
 ``array<struct<ts, value>>`` sorted by ts; the tsrange is a (start, end)
 struct (A5); as-of extraction (W3) filters the array; containment (F6) is
-an ``exists`` over instants. Append (W4/J9) is recompute-per-batch — union
-the new flat rows and re-aggregate (Delta MERGE would do keyed upserts; no
-Delta jars in this image, so the pure recompute path is canonical and the
-MERGE path is stubbed in streaming/ingest.py).
+an ``exists`` over instants. Every flat row is a one-instant partial
+sequence, and one per-uuid merge turns partial or stored sequences into
+stored ones, so a write merges the batch's partials and an append (W4/J9)
+merges the stored rows with them — recompute-per-batch, O(history)
+(Delta MERGE would do keyed upserts; without the Delta jars the pure
+recompute path is canonical and the MERGE path is stubbed in
+``delta_store.py``).
 
 Scale posture: one shuffle on uuid builds every sequence (groupBy +
-sort_array(collect_list)); per-entity arrays are bounded by the batch
-window (the reference flushes every 500 snapshots — at 20 s cadence that
-is ~2.8 h of instants per vehicle, thousands of elements, comfortably
+sort_array(flatten(collect_list))); per-entity arrays are bounded by the
+batch window (the reference flushes every 500 snapshots — at 20 s cadence
+that is ~2.8 h of instants per vehicle, thousands of elements, comfortably
 in-memory per row). Reads prune on the timerange struct before touching
 arrays.
 """
@@ -26,9 +29,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.codecs import decode_direction
+from ..functions.codecs import decode_direction, encode_direction
 from ..schemas import TEMPORAL_SCHEMA
-from .flat_store import explode_features, feature_collection
+from .flat_store import explode_features, renest_documents
 from .maintenance import recover_dir, replace_dir
 
 _MEASURES = {
@@ -40,40 +43,54 @@ _MEASURES = {
 }
 
 
-def _instants(value_col: str, cast: str) -> Column:
-    return F.sort_array(
-        F.collect_list(
-            F.struct(F.col("ts").alias("ts"), F.col(value_col).cast(cast).alias("value"))
-        )
-    )
-
-
-def build_temporal(documents: DataFrame) -> DataFrame:
-    """documents -> one row per uuid with instant sequences (A1/W6),
-    tsrange bounds (A5) and first-seen static attributes (A9)."""
-    flat = explode_features(documents).withColumn("ts", F.to_timestamp("timestamp"))
-    seq_aggs = [
-        _instants(src, cast).alias(name) for name, (src, cast) in _MEASURES.items()
-    ]
-    positions = F.sort_array(
-        F.collect_list(
+def _partials(documents: DataFrame) -> DataFrame:
+    """Each flat row as a one-instant partial sequence row: the temporal
+    schema, with every sequence holding the row's single instant."""
+    ts = F.to_timestamp("timestamp").alias("ts")
+    flat = explode_features(documents)
+    return flat.select(
+        "uuid",
+        F.struct(ts.alias("start"), ts.alias("end")).alias("timerange"),
+        F.array(
             F.struct(
-                F.col("ts").alias("ts"),
+                ts,
                 F.col("coordinates_0").cast("double").alias("lon"),
                 F.col("coordinates_1").cast("double").alias("lat"),
             )
-        )
-    ).alias("positions")
-    return flat.groupBy("uuid").agg(
+        ).alias("positions"),
+        *[
+            F.array(F.struct(ts, F.col(src).cast(cast).alias("value"))).alias(name)
+            for name, (src, cast) in _MEASURES.items()
+        ],
+        "color",
+        decode_direction(F.col("direction")).alias("direction"),
+        "lineId",
+    )
+
+
+def _merge(sequences: DataFrame) -> DataFrame:
+    """The one per-uuid aggregate: partial or stored sequence rows -> one
+    stored row per uuid (A1/W6). Timerange is min/max (A5); sequences are
+    the sorted union of instants; static attributes are first-seen by
+    event time (min_by = first-seen, A9). ``array_distinct`` makes a
+    replayed instant a no-op: each sequence keeps an instant equal to one
+    it already holds once. So re-appending a batch changes nothing, a
+    feature repeated verbatim in one snapshot collapses to one instant, and
+    a uuid repeated in one snapshot with differing values keeps one instant
+    in each sequence where the values agree (its ``id``, say)."""
+    return sequences.groupBy("uuid").agg(
         F.struct(
-            F.min("ts").alias("start"), F.max("ts").alias("end")
+            F.min("timerange.start").alias("start"),
+            F.max("timerange.end").alias("end"),
         ).alias("timerange"),
-        positions,
-        *seq_aggs,
-        # static attributes: first by event time (min_by = first-seen, A9)
-        F.min_by("color", "ts").alias("color"),
-        decode_direction(F.min_by("direction", "ts")).alias("direction"),
-        F.min_by("lineId", "ts").alias("lineId"),
+        *[
+            F.array_distinct(F.sort_array(F.flatten(F.collect_list(name)))).alias(name)
+            for name in ("positions", *_MEASURES)
+        ],
+        *[
+            F.min_by(name, "timerange.start").alias(name)
+            for name in ("color", "direction", "lineId")
+        ],
     )
 
 
@@ -105,34 +122,19 @@ class TemporalStore:
         self.path = path
 
     def write(self, documents: DataFrame, mode: str = "overwrite") -> None:
-        build_temporal(documents).write.mode(mode).parquet(self.path)
+        _merge(_partials(documents)).write.mode(mode).parquet(self.path)
 
     def scan(self, spark: SparkSession) -> DataFrame:
         recover_dir(spark, self.path)
         return spark.read.schema(TEMPORAL_SCHEMA).parquet(self.path)
 
     def append_batch(self, spark: SparkSession, documents: DataFrame) -> None:
-        """W4/J9: instant append, pure-recompute flavor — merge stored
-        sequences with the new batch by re-aggregating the union of
-        instants. (Reference mutates rows via ``appendinstant``;
-        recompute is the deterministic distributed equivalent.)"""
-        stored = self.scan(spark)
-        new = build_temporal(documents)
-        both = stored.unionByName(new)
-        merged = both.groupBy("uuid").agg(
-            F.struct(
-                F.min("timerange.start").alias("start"),
-                F.max("timerange.end").alias("end"),
-            ).alias("timerange"),
-            F.sort_array(F.flatten(F.collect_list("positions"))).alias("positions"),
-            *[
-                F.sort_array(F.flatten(F.collect_list(name))).alias(name)
-                for name in _MEASURES
-            ],
-            F.min_by("color", "timerange.start").alias("color"),
-            F.min_by("direction", "timerange.start").alias("direction"),
-            F.min_by("lineId", "timerange.start").alias("lineId"),
-        )
+        """W4/J9: instant append, pure-recompute flavor — the stored rows
+        and the batch's partial sequences go through the one ``_merge``
+        aggregate. (Reference mutates rows via ``appendinstant``;
+        recompute is the deterministic distributed equivalent.) Replaying
+        a batch changes nothing: its instants are already held."""
+        merged = _merge(self.scan(spark).unionByName(_partials(documents)))
         # Self-overwrite: write aside, then swap (persist() is NOT a
         # reliability barrier — an evicted cached partition would
         # recompute against files an in-place overwrite already deleted)
@@ -154,30 +156,16 @@ class TemporalStore:
             & contains_instant(F.col("positions"), ts)
         )
         pos = F.filter(F.col("positions"), lambda x: x["ts"] == ts)[0]
-        feature = F.struct(
-            F.lit("Feature").alias("type"),
-            F.col("uuid").alias("id"),
-            F.struct(
-                F.lit("Point").alias("type"),
-                F.array(pos["lon"], pos["lat"]).alias("coordinates"),
-            ).alias("geometry"),
-            F.struct(
-                F.col("uuid").alias("uuid"),
-                at_timestamp(F.col("id"), ts).alias("id"),
-                F.col("color").alias("color"),
-                F.col("direction").alias("direction"),
-                at_timestamp(F.col("distance"), ts).alias("distance"),
-                at_timestamp(F.col("distanceFromPoint"), ts).alias("distanceFromPoint"),
-                F.col("lineId").alias("lineId"),
-                at_timestamp(F.col("pointId"), ts).alias("pointId"),
-            ).alias("properties"),
+        # the instant's values under the flat column names, so the one
+        # re-nest builds the feature (direction is stored decoded)
+        flat = hit.select(
+            F.lit(timestamp).alias("timestamp"),
+            "uuid",
+            "color",
+            encode_direction(F.col("direction")).alias("direction"),
+            "lineId",
+            pos["lon"].alias("coordinates_0"),
+            pos["lat"].alias("coordinates_1"),
+            *[at_timestamp(F.col(name), ts).alias(name) for name in _MEASURES],
         )
-        # groupBy a constant (not a global agg): zero input rows -> zero
-        # output rows, matching the other stores' "document absent"
-        # signal instead of fabricating an empty FeatureCollection.
-        return (
-            hit.select(feature.alias("f"))
-            .groupBy(F.lit(timestamp).alias("timestamp"))
-            .agg(F.sort_array(F.collect_list("f")).alias("_features"))
-            .select("timestamp", feature_collection(F.col("_features")))
-        )
+        return renest_documents(flat)

@@ -19,14 +19,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.codecs import ts_bucket
 from ..schemas import (
-    TS_BUCKET_COL,
     VELOCITY2_BUS_SCHEMA,
     VELOCITY2_OBS_SCHEMA,
     VELOCITY2_VEHICLE_SCHEMA,
 )
-from .flat_store import explode_features, renest_documents
+from .flat_store import at_snapshot, explode_features, renest_documents, write_bucketed
 from .maintenance import exists
 
 _SCHEMAS = {
@@ -63,7 +61,6 @@ def build_velocity2_tables(
     )
     obs = flat.select(
         "timestamp",
-        ts_bucket(F.col("timestamp")).alias(TS_BUCKET_COL),
         veh_key.alias("vehicle_id"),
         "distance",
         "pointId",
@@ -95,14 +92,12 @@ class Velocity2ParquetStore:
                 stored = self._read(spark, name).select(key)
                 df_new = df_new.join(stored, key, "left_anti")
             df_new.write.mode(mode).parquet(self._p(name))
-        obs.write.mode(mode).partitionBy(TS_BUCKET_COL).parquet(self._p("obs"))
+        write_bucketed(obs, self._p("obs"), mode)
 
     def get_document(self, spark: SparkSession, timestamp: str) -> DataFrame:
-        obs = self._read(spark, "obs").filter(
-            (F.col(TS_BUCKET_COL) == timestamp[:13]) & (F.col("timestamp") == timestamp)
-        )
         flat = (
-            obs.join(F.broadcast(self._read(spark, "vehicle")), "vehicle_id")
+            at_snapshot(self._read(spark, "obs"), timestamp)
+            .join(F.broadcast(self._read(spark, "vehicle")), "vehicle_id")
             .join(F.broadcast(self._read(spark, "bus")), "bus_id")
             .withColumn("id", F.col("vid"))
         )

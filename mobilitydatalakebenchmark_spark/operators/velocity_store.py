@@ -16,8 +16,9 @@ Spark-first deviations (documented, SURVEY.md §2.9 / §7):
   left-anti novelty join (F4/J8) against the stored dim.
 
 Scale posture: main is tiny (1 row/snapshot); l1 is bounded by the fleet
-size (broadcastable); l2 is the fact table, partitioned by hour bucket.
-Point reads prune l2 partitions, then two broadcast hash joins.
+size (broadcastable); l2 is the fact table, written by ``write_bucketed``.
+Point reads prune l2 to one partition, broadcast-join l1, and re-nest
+against the main hit, which alone decides whether the snapshot exists.
 """
 
 from __future__ import annotations
@@ -33,7 +34,7 @@ from ..schemas import (
     VELOCITY_L2_SCHEMA,
     VELOCITY_MAIN_SCHEMA,
 )
-from .flat_store import explode_features, feature_collection, renest_documents
+from .flat_store import at_snapshot, explode_features, renest_documents, write_bucketed
 from .maintenance import exists
 
 _SCHEMAS = {
@@ -61,8 +62,8 @@ def build_velocity_tables(
 
     main: (timestamp, ts_bucket)            one row per snapshot (incl. empty)
     l1:   (l1_id, uuid, vid, color, direction, lineId)   first-seen per uuid
-    l2:   (timestamp, ts_bucket, l1_id, distance, pointId,
-           distanceFromPoint, coordinates_0, coordinates_1)
+    l2:   (timestamp, l1_id, distance, pointId, distanceFromPoint,
+           coordinates_0, coordinates_1), bucketed on write
     """
     flat = explode_features(documents)
 
@@ -87,7 +88,6 @@ def build_velocity_tables(
 
     l2 = flat.select(
         "timestamp",
-        ts_bucket(F.col("timestamp")).alias(TS_BUCKET_COL),
         _l1_key().alias("l1_id"),
         "distance",
         "pointId",
@@ -119,29 +119,23 @@ class VelocityParquetStore:
             l1 = l1.join(self._read(spark, "l1").select("l1_id"), "l1_id", "left_anti")
         main.write.mode(mode).parquet(self._p("main"))
         l1.write.mode(mode).parquet(self._p("l1"))
-        l2.write.mode(mode).partitionBy(TS_BUCKET_COL).parquet(self._p("l2"))
+        write_bucketed(l2, self._p("l2"), mode)
 
     def tables(self, spark: SparkSession) -> tuple[DataFrame, DataFrame, DataFrame]:
         return tuple(self._read(spark, table) for table in ("main", "l1", "l2"))
 
     def get_document(self, spark: SparkSession, timestamp: str) -> DataFrame:
-        """J6: main ⨝ l2 ⨝ l1 reconstruction
-        (reference ``apache_parquet_velocity.py:222-249``)."""
+        """J6: l2 ⨝ l1 reconstruction, re-nested against main
+        (reference ``apache_parquet_velocity.py:222-249``): an empty
+        snapshot is in main with no l2 rows and reads as ``features == []``;
+        a timestamp main does not hold reads as no row."""
         main, l1, l2 = self.tables(spark)
-        bucket = timestamp[:13]
-        main_hit = main.filter(F.col("timestamp") == timestamp).select("timestamp")
         obs = (
-            l2.filter((F.col(TS_BUCKET_COL) == bucket) & (F.col("timestamp") == timestamp))
-            .join(F.broadcast(main_hit), "timestamp")
+            at_snapshot(l2, timestamp)
             .join(F.broadcast(l1), "l1_id")
             .withColumn("id", F.col("vid"))
         )
-        docs = renest_documents(obs)
-        empty = F.array().cast(docs.schema["data"].dataType["features"].dataType)
-        # empty snapshots exist in main but have no l2 rows -> left join
-        return main_hit.join(docs, "timestamp", "left").select(
-            "timestamp", feature_collection(F.coalesce(F.col("data.features"), empty))
-        )
+        return renest_documents(obs, snapshots=main.filter(F.col("timestamp") == timestamp))
 
     def total_size(self) -> int:
         from ..sources.size import dir_size

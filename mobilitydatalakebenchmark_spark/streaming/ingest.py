@@ -10,9 +10,9 @@ Reference semantics being reproduced:
   a DataFrame and appends through the same batch pipelines (exactly-once
   per epoch on replayable sources + idempotent sinks).
 - W2 (``apache_parquet.py:27``): bucket-change state reset — implicit:
-  every batch writes through ``partitionBy(ts_bucket)``, so rows land in
-  their bucket regardless of batch alignment; no mutable accumulator state
-  exists to reset.
+  every batch appends through ``FlatParquetStore.write``, whose hour-bucket
+  partitioning lands rows in their bucket regardless of batch alignment;
+  no mutable accumulator state exists to reset.
 
 Scale posture: checkpointed progress, per-batch append, partition columns
 carried through — the same topology runs against object storage with a
@@ -28,10 +28,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .run_identity import Txn, start_sink
 
-from ..operators.flat_store import explode_features
+from ..operators.flat_store import FlatParquetStore, explode_features
 from ..operators.maintenance import exists
-from ..functions.codecs import ts_bucket
-from ..schemas import FLAT_STORE_SCHEMA, TS_BUCKET_COL
 from ..sources.geojson import snapshot_documents
 
 
@@ -49,7 +47,7 @@ def stream_to_flat_store(
     documents: DataFrame, table_path: str, checkpoint: str
 ) -> StreamingQuery:
     """W5: micro-batch append into the flat parquet store. Each epoch is
-    the reference's 'buffer flush' — explode+flatten+bucket, append.
+    the reference's 'buffer flush' — a ``FlatParquetStore`` append.
 
     Idempotent under replay: a snapshot's timestamp is its identity
     (`base_store.py:12-14` — one document per timestamp), so each batch
@@ -59,21 +57,15 @@ def stream_to_flat_store(
     snapshot's rows. A fully replayed or empty batch appends no part
     file, so the flush needs no emptiness probe."""
 
+    store = FlatParquetStore(table_path)
+
     def flush(batch: DataFrame, txn: Txn) -> None:
-        spark = batch.sparkSession
         fresh = batch
-        if exists(spark, table_path):
+        if exists(batch.sparkSession, table_path):
             # executor-side anti-join, never a driver timestamp list — a
             # replayed availableNow backlog is the whole history
-            existing = spark.read.schema(FLAT_STORE_SCHEMA).parquet(table_path)
-            fresh = batch.join(existing.select("timestamp"), "timestamp", "left_anti")
-        (
-            explode_features(fresh)
-            .withColumn(TS_BUCKET_COL, ts_bucket(F.col("timestamp")))
-            .write.mode("append")
-            .partitionBy(TS_BUCKET_COL)
-            .parquet(table_path)
-        )
+            fresh = batch.join(store.scan().select("timestamp"), "timestamp", "left_anti")
+        store.write(fresh, mode="append")
 
     return start_sink(documents, checkpoint, flush)
 

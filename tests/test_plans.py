@@ -7,8 +7,6 @@ from __future__ import annotations
 import pytest
 pytestmark = pytest.mark.slow  # r13: heavy suite, excluded from the default fast tier (run with -m "" or -m slow)
 
-from pyspark.sql import functions as F
-
 from mobilitydatalakebenchmark_spark.plans import explain, load_registry
 
 SF = "/root/testdata/sf0.001"
@@ -53,14 +51,15 @@ def test_topk_uses_takeordered_or_window(spark, registry):
 
 
 def test_flat_store_partition_pruning(spark, tmp_path, documents_df):
-    from mobilitydatalakebenchmark_spark.operators.flat_store import FlatParquetStore
+    from mobilitydatalakebenchmark_spark.operators.flat_store import (
+        FlatParquetStore,
+        at_snapshot,
+    )
 
     store = FlatParquetStore(str(tmp_path / "t"))
     store.write(documents_df)
     ts = documents_df.select("timestamp").orderBy("timestamp").limit(1).collect()[0][0]
-    flat = store.scan().filter(
-        (F.col("ts_bucket") == ts[:13]) & (F.col("timestamp") == ts)
-    )
+    flat = at_snapshot(store.scan(), ts)
     assert explain.has_partition_filter(flat, "ts_bucket")
     assert explain.has_pushed_filter(flat, "timestamp")
 

@@ -74,6 +74,20 @@ def test_roundtrip_all_nonempty(spark, store, segmented_store, snapshots):
                 _assert_feature_eq(g, w)
 
 
+def test_segment_by_sorts_each_file(segmented_store):
+    """The segment order reaches the files: every part file's uuids are
+    non-decreasing."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    files = glob.glob(f"{segmented_store.path}/*/*.parquet")
+    assert files
+    for path in files:
+        uuids = pq.read_table(path, columns=["uuid"]).column("uuid").to_pylist()
+        assert uuids == sorted(uuids), path
+
+
 def test_empty_snapshot_absent_from_flat(store, snapshots):
     ts_empty = snapshots[5][0]
     assert snapshots[5][1]["features"] == []

@@ -207,6 +207,27 @@ class TestTemporal:
         b = full.scan(spark).select("uuid", F.size("distance").alias("n")).orderBy("uuid")
         assert [r.asDict() for r in a.collect()] == [r.asDict() for r in b.collect()]
 
+    def test_replayed_append_changes_nothing(self, spark, tmp_path_factory, documents_df):
+        """Appending the same batch twice gives the sequences of a one-shot
+        write: a replayed instant is already held."""
+        from pyspark.sql import functions as F
+
+        store = TemporalStore(str(tmp_path_factory.mktemp("tmp4") / "t"))
+        first = documents_df.orderBy("timestamp").limit(10)
+        rest = documents_df.join(first.select("timestamp"), "timestamp", "left_anti")
+        store.write(first)
+        store.append_batch(spark, rest)
+        store.append_batch(spark, rest)
+        full = TemporalStore(str(tmp_path_factory.mktemp("tmp5") / "t"))
+        full.write(documents_df)
+
+        def sizes(s):
+            seqs = ("positions", "distance", "distanceFromPoint", "id", "pointId")
+            df = s.scan(spark).select("uuid", *[F.size(c).alias(c) for c in seqs])
+            return [r.asDict() for r in df.orderBy("uuid").collect()]
+
+        assert sizes(store) == sizes(full)
+
 
 class TestDocumentStores:
     def test_parquet_doc_roundtrip(self, spark, tmp_path, documents_df, snapshots):

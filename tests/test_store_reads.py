@@ -1,0 +1,100 @@
+"""Point reads across every store: which keys have a document, and how many
+Spark jobs a read or an append costs."""
+
+from __future__ import annotations
+
+import itertools
+
+import pytest
+
+from mobilitydatalakebenchmark_spark.operators.document_store import DocumentParquetStore
+from mobilitydatalakebenchmark_spark.operators.encoded_store import (
+    CantorParquetStore,
+    VelocitySplitParquetStore,
+)
+from mobilitydatalakebenchmark_spark.operators.flat_store import FlatParquetStore
+from mobilitydatalakebenchmark_spark.operators.temporal_store import TemporalStore
+from mobilitydatalakebenchmark_spark.operators.velocity2_store import Velocity2ParquetStore
+from mobilitydatalakebenchmark_spark.operators.velocity_store import VelocityParquetStore
+
+STORES = {
+    "flat": FlatParquetStore,
+    "cantor": CantorParquetStore,  # packed
+    "velocity_split": VelocitySplitParquetStore,
+    "velocity": VelocityParquetStore,
+    "velocity2": Velocity2ParquetStore,
+    "temporal": TemporalStore,
+    "document": DocumentParquetStore,
+}
+# stores that keep a document for a snapshot with no features
+KEEPS_EMPTY = {"velocity", "document"}
+
+_groups = itertools.count()
+
+
+def _jobs(spark, action) -> int:
+    """Spark jobs ``action`` runs, counted through a status-tracker job group."""
+    sc = spark.sparkContext
+    group = f"store-reads-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _read(spark, store, ts):
+    if isinstance(store, FlatParquetStore):
+        return store.get_document(ts)
+    return store.get_document(spark, ts)
+
+
+@pytest.fixture(scope="module")
+def stores(tmp_path_factory, documents_df):
+    root = tmp_path_factory.mktemp("stores")
+    built = {}
+    for name, cls in STORES.items():
+        built[name] = cls(str(root / name))
+        built[name].write(documents_df)
+    return built
+
+
+@pytest.mark.parametrize("name", sorted(STORES))
+def test_absent_and_empty_keys(spark, stores, snapshots, name):
+    store = stores[name]
+    assert _read(spark, store, "1999-01-01T00:00:00").count() == 0
+    ts_empty, data = snapshots[5]
+    assert data["features"] == []
+    rows = _read(spark, store, ts_empty).collect()
+    if name in KEEPS_EMPTY:
+        assert [(r.timestamp, r.data.features) for r in rows] == [(ts_empty, [])]
+    else:
+        assert rows == []
+
+
+@pytest.fixture(scope="module")
+def batches(documents_df):
+    """Two cached batches, so that a count holds only the store's jobs."""
+    first = documents_df.orderBy("timestamp").limit(20).cache()
+    rest = documents_df.join(first.select("timestamp"), "timestamp", "left_anti").cache()
+    first.count(), rest.count()
+    yield first, rest
+    first.unpersist(), rest.unpersist()
+
+
+def test_velocity_read_jobs(spark, tmp_path, batches, snapshots):
+    """The main hit is re-nested with the observations, not joined."""
+    store = VelocityParquetStore(str(tmp_path / "velocity"))
+    for batch in batches:
+        store.write(batch, mode="append")
+    for ts, _ in (snapshots[2], snapshots[5], ("1999-01-01T00:00:00", None)):
+        assert _jobs(spark, _read(spark, store, ts).collect) <= 3, ts
+
+
+def test_temporal_append_jobs(spark, tmp_path, batches):
+    """Stored rows and the batch's partial sequences merge in one aggregate."""
+    first, rest = batches
+    store = TemporalStore(str(tmp_path / "temporal"))
+    store.write(first)
+    assert _jobs(spark, lambda: store.append_batch(spark, rest)) <= 2
