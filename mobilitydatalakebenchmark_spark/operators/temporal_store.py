@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from ..functions.codecs import decode_direction, encode_direction
 from ..schemas import TEMPORAL_SCHEMA
 from .flat_store import explode_features, renest_documents
-from .maintenance import recover_dir, replace_dir
+from .maintenance import exists, recover_dir, replace_dir
 
 _MEASURES = {
     # temporal column -> (source column, value cast)
@@ -122,23 +122,34 @@ class TemporalStore:
         self.path = path
 
     def write(self, documents: DataFrame, mode: str = "overwrite") -> None:
-        _merge(_partials(documents)).write.mode(mode).parquet(self.path)
+        """Write the documents' sequences. ``mode="append"`` is W4/J9's
+        instant append, pure-recompute flavor: the stored rows and the
+        batch's partial sequences go through the one ``_merge``
+        aggregate, so each uuid keeps one row. (Reference mutates rows
+        via ``appendinstant``; recompute is the deterministic distributed
+        equivalent.) Replaying a batch changes nothing: its instants are
+        already held. Appending to a missing store is a plain write."""
+        spark = documents.sparkSession
+        partials = _partials(documents)
+        if mode == "append":
+            recover_dir(spark, self.path)
+            if exists(spark, self.path):
+                merged = _merge(self.scan(spark).unionByName(partials))
+                # Self-overwrite: write aside, then swap (persist() is NOT
+                # a reliability barrier — an evicted cached partition
+                # would recompute against files an in-place overwrite
+                # already deleted)
+                replace_dir(spark, self.path, merged.write.mode("overwrite").parquet)
+                return
+        _merge(partials).write.mode(mode).parquet(self.path)
 
     def scan(self, spark: SparkSession) -> DataFrame:
         recover_dir(spark, self.path)
         return spark.read.schema(TEMPORAL_SCHEMA).parquet(self.path)
 
     def append_batch(self, spark: SparkSession, documents: DataFrame) -> None:
-        """W4/J9: instant append, pure-recompute flavor — the stored rows
-        and the batch's partial sequences go through the one ``_merge``
-        aggregate. (Reference mutates rows via ``appendinstant``;
-        recompute is the deterministic distributed equivalent.) Replaying
-        a batch changes nothing: its instants are already held."""
-        merged = _merge(self.scan(spark).unionByName(_partials(documents)))
-        # Self-overwrite: write aside, then swap (persist() is NOT a
-        # reliability barrier — an evicted cached partition would
-        # recompute against files an in-place overwrite already deleted)
-        replace_dir(spark, self.path, merged.write.mode("overwrite").parquet)
+        """``write(documents, mode="append")``, under the name perfbench calls."""
+        self.write(documents, mode="append")
 
     def total_size(self) -> int:
         from ..sources.size import dir_size

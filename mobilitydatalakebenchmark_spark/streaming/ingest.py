@@ -129,22 +129,17 @@ def stream_to_ann_index(
     artifact; retraining is a batch decision, not a streaming one).
 
     Replay protection — the append is IDEMPOTENT, not merely
-    epoch-counted. Two layers:
-
-    1. Anti-membership: every batch is stripped of ids the store already
-       holds (a left-anti join against the store's id table, entirely
-       executor-side) before appending. This is what makes at-least-once
-       delivery effectively once under EVERY replay shape: a crash between
-       the codes append and the state write, a fresh checkpoint replaying
-       the same source, or an upstream that re-delivers rows across
-       epochs. A duplicate id can never double-append code/list rows
-       (which would silently double ADC/cosine scores). Cost: one scan of
-       the store's id column per micro-batch — the price of idempotence
-       without a transactional sink; with Delta available this becomes a
-       MERGE and the scan goes away.
-    2. Epoch fast path: ``start_sink``'s per-run high-water mark under
-       ``stream_state.parquet`` skips an epoch at or below its own run's
-       mark without touching the id table."""
+    epoch-counted: every batch is stripped of ids the store already
+    holds (a left-anti join against the store's id table, entirely
+    executor-side) before appending. This is what makes at-least-once
+    delivery effectively once under EVERY replay shape: a crash between
+    the codes append and the offset commit, a fresh checkpoint replaying
+    the same source, or an upstream that re-delivers rows across epochs.
+    A duplicate id can never double-append code/list rows (which would
+    silently double ADC/cosine scores). Cost: one scan of the store's id
+    column per micro-batch — the price of idempotence without a
+    transactional sink; with Delta available this becomes a MERGE and
+    the scan goes away."""
 
     def flush(batch: DataFrame, txn: Txn) -> None:
         # idempotent append: drop ids the store already holds, via a
@@ -166,14 +161,4 @@ def stream_to_ann_index(
         finally:
             fresh.unpersist()
 
-    return start_sink(
-        embeddings_stream,
-        checkpoint,
-        flush,
-        marks=f"{store.path}/stream_state.parquet",
-    )
-
-
-# committed name for the PQ-specific round-5 API; the implementation was
-# store-agnostic from the start
-stream_to_pq_index = stream_to_ann_index
+    return start_sink(embeddings_stream, checkpoint, flush)

@@ -8,9 +8,8 @@ the left base are each deduped independently against the batch by row
 id (executor-side anti-joins), so a crash at ANY point of a previous
 attempt — including between the view write and the base write —
 converges on replay instead of double-inserting join rows or dropping
-base rows. The epoch high-water mark of ``run_identity.start_sink`` is
-the fast path. ``row_id_col`` must uniquely identify left rows across
-the stream's lifetime (an event id, not the join key — join keys repeat).
+base rows. ``row_id_col`` must uniquely identify left rows across the
+stream's lifetime (an event id, not the join key — join keys repeat).
 """
 
 from __future__ import annotations
@@ -36,6 +35,4 @@ def stream_to_materialized_join(
     def flush(batch: DataFrame, txn: Txn) -> None:
         mj.append_idempotent(batch, row_id_col)
 
-    return start_sink(
-        left_stream, checkpoint, flush, marks=f"{mj.path}/stream_state.parquet"
-    )
+    return start_sink(left_stream, checkpoint, flush)

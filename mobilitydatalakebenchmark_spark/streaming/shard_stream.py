@@ -12,12 +12,12 @@ the ``rollup_stream`` posture.
 
 Replay protection (the sink contract is in ``run_identity.py``): each
 batch is stripped, via an executor-side anti-join, of doc ids the store
-already holds, with a per-run epoch high-water mark as the fast path.
-When a replayed batch turns out partially-or-fully written, the manifest
-rows for the shards holding it are re-derived from the data first
-(``repair_manifest``) — healing the crash window between a data append
-and its manifest rewrite, which would otherwise leave fill levels
-understated and place later docs at overlapping offsets.
+already holds. When a replayed batch turns out partially-or-fully
+written, the manifest rows for the shards holding it are re-derived
+from the data first (``repair_manifest``) — healing the crash window
+between a data append and its manifest rewrite, which would otherwise
+leave fill levels understated and place later docs at overlapping
+offsets.
 """
 
 from __future__ import annotations
@@ -92,6 +92,4 @@ def stream_to_shards(
             if existing is not None:
                 fresh.unpersist()
 
-    return start_sink(
-        docs_stream, checkpoint, flush, marks=f"{path}/stream_state.parquet"
-    )
+    return start_sink(docs_stream, checkpoint, flush)

@@ -116,7 +116,7 @@ class TestKnnGraphReciprocity:
 class TestFleschReadability:
     def test_formula_by_hand(self, spark, tmp_path):
         text = "The cat sat. The dog ran!"
-        # words=6 (split on space), sentence marks=2, vowel groups:
+        # words=6 (split on space), sentence-end marks: 2, vowel groups:
         # e,a,a,e,o,a -> 6
         sf = _write_docs(spark, tmp_path, [(0, text, "A", len(text))])
         q = load_registry()["text_readability_flesch"].spark

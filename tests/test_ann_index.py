@@ -251,7 +251,7 @@ def test_streaming_append_matches_batch_rebuild(spark, embeddings, probes, tmp_p
     into a pre-built index; probes must answer identically to the batch
     build(half)+append(rest) path (itself pinned equal to a full rebuild)."""
     from mobilitydatalakebenchmark_spark.operators.ann_index import PQIndexStore
-    from mobilitydatalakebenchmark_spark.streaming.ingest import stream_to_pq_index
+    from mobilitydatalakebenchmark_spark.streaming.ingest import stream_to_ann_index
 
     half_a = embeddings.filter(F.col("vec_id") % 2 == 0)
     half_b = embeddings.filter(F.col("vec_id") % 2 == 1)
@@ -267,7 +267,7 @@ def test_streaming_append_matches_batch_rebuild(spark, embeddings, probes, tmp_p
         .option("maxFilesPerTrigger", "1")
         .parquet(landing)
     )
-    q = stream_to_pq_index(stream, streamed, str(tmp_path / "ckpt"))
+    q = stream_to_ann_index(stream, streamed, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
     batch = PQIndexStore(str(tmp_path / "batch_idx"), **GEOM)
@@ -326,11 +326,11 @@ def test_ivf_append_assigns_to_nearest_frozen_centroid(
 
 def test_streaming_append_is_replay_safe(spark, embeddings, probes, tmp_path):
     """Re-running the stream with a FRESH checkpoint re-delivers every
-    epoch; the store's stream_state guard must skip the already-applied
-    epochs instead of double-appending code rows (which would double
-    adc_d2 for those vectors and corrupt every subsequent ranking)."""
+    epoch; the id anti-join must drop the already-appended vectors
+    instead of double-appending code rows (which would double adc_d2 for
+    those vectors and corrupt every subsequent ranking)."""
     from mobilitydatalakebenchmark_spark.operators.ann_index import PQIndexStore
-    from mobilitydatalakebenchmark_spark.streaming.ingest import stream_to_pq_index
+    from mobilitydatalakebenchmark_spark.streaming.ingest import stream_to_ann_index
 
     half_a = embeddings.filter(F.col("vec_id") % 2 == 0)
     half_b = embeddings.filter(F.col("vec_id") % 2 == 1)
@@ -344,14 +344,55 @@ def test_streaming_append_is_replay_safe(spark, embeddings, probes, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(landing)
     )
-    stream_to_pq_index(stream(), store, str(tmp_path / "ckpt1")).awaitTermination(120)
+    stream_to_ann_index(stream(), store, str(tmp_path / "ckpt1")).awaitTermination(120)
     before = _rows(store.topk(probes, k=5))
     n_before = store.meta(spark)["n_vectors"]
 
     # replay: fresh checkpoint => epochs 0..n re-delivered from scratch
-    stream_to_pq_index(stream(), store, str(tmp_path / "ckpt2")).awaitTermination(120)
+    stream_to_ann_index(stream(), store, str(tmp_path / "ckpt2")).awaitTermination(120)
     assert store.meta(spark)["n_vectors"] == n_before
     assert _rows(store.topk(probes, k=5)) == before
+
+
+def test_same_checkpoint_replay_changes_nothing(spark, embeddings, probes, tmp_path):
+    """A crash after the sink returned but before Spark committed the
+    epoch: the restart replays the last epoch on the same checkpoint, and
+    the id anti-join leaves the index as it was, with no new part file."""
+    from mobilitydatalakebenchmark_spark.operators.ann_index import PQIndexStore
+    from mobilitydatalakebenchmark_spark.operators.maintenance import count_data_files
+    from mobilitydatalakebenchmark_spark.streaming.ingest import stream_to_ann_index
+
+    from .test_run_identity import drop_last_commit
+
+    half_a = embeddings.filter(F.col("vec_id") % 2 == 0)
+    half_b = embeddings.filter(F.col("vec_id") % 2 == 1)
+    landing = str(tmp_path / "landing")
+    half_b.repartition(2).write.parquet(landing)
+
+    store = PQIndexStore(str(tmp_path / "idx"), **GEOM)
+    store.build(half_a)
+    ckpt = str(tmp_path / "ckpt")
+
+    def drain():
+        stream = (
+            spark.readStream.schema(half_b.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(landing)
+        )
+        q = stream_to_ann_index(stream, store, ckpt)
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    drain()
+    before = _rows(store.topk(probes, k=5))
+    files_before = count_data_files(store.path)
+    assert store.meta(spark)["n_vectors"] == embeddings.count()
+    assert drop_last_commit(ckpt) == 1
+    drain()
+    assert store.meta(spark)["n_vectors"] == embeddings.count()
+    assert store.indexed_ids(spark).count() == embeddings.count()
+    assert _rows(store.topk(probes, k=5)) == before
+    assert count_data_files(store.path) == files_before
 
 
 def test_streaming_append_into_ivf_index(spark, embeddings, tmp_path):
@@ -388,13 +429,13 @@ def test_streaming_append_into_ivf_index(spark, embeddings, tmp_path):
 
 def test_streaming_append_survives_crash_window(spark, embeddings, probes, tmp_path):
     """The ADVICE-flagged crash shape: an epoch's append COMMITS but the
-    stream-state write does not (crash between the two), so the restarted
+    offset commit does not (crash between the two), so the restarted
     query re-delivers the same rows. Simulated by appending the streamed
     half directly (the 'committed append') and then streaming the same
     data with a checkpoint that has no state: the idempotence anti-join
     must drop every already-present id instead of double-appending."""
     from mobilitydatalakebenchmark_spark.operators.ann_index import PQIndexStore
-    from mobilitydatalakebenchmark_spark.streaming.ingest import stream_to_pq_index
+    from mobilitydatalakebenchmark_spark.streaming.ingest import stream_to_ann_index
 
     half_a = embeddings.filter(F.col("vec_id") % 2 == 0)
     half_b = embeddings.filter(F.col("vec_id") % 2 == 1)
@@ -412,7 +453,7 @@ def test_streaming_append_survives_crash_window(spark, embeddings, probes, tmp_p
         .option("maxFilesPerTrigger", "1")
         .parquet(landing)
     )
-    stream_to_pq_index(stream, store, str(tmp_path / "ckpt")).awaitTermination(120)
+    stream_to_ann_index(stream, store, str(tmp_path / "ckpt")).awaitTermination(120)
     assert store.meta(spark)["n_vectors"] == n_before
     assert _rows(store.topk(probes, k=5)) == before
 
@@ -424,7 +465,7 @@ def test_new_stream_on_existing_store_keeps_new_data(spark, embeddings, tmp_path
     its first batches. State is keyed by checkpoint now: stream thirds b
     and c through two different checkpoints — both must land in full."""
     from mobilitydatalakebenchmark_spark.operators.ann_index import PQIndexStore
-    from mobilitydatalakebenchmark_spark.streaming.ingest import stream_to_pq_index
+    from mobilitydatalakebenchmark_spark.streaming.ingest import stream_to_ann_index
 
     third_a = embeddings.filter(F.col("vec_id") % 3 == 0)
     third_b = embeddings.filter(F.col("vec_id") % 3 == 1)
@@ -440,7 +481,7 @@ def test_new_stream_on_existing_store_keeps_new_data(spark, embeddings, tmp_path
             .option("maxFilesPerTrigger", "1")
             .parquet(landing)
         )
-        stream_to_pq_index(
+        stream_to_ann_index(
             stream, store, str(tmp_path / f"ckpt_{name}")
         ).awaitTermination(120)
 

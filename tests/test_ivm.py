@@ -123,6 +123,46 @@ def test_streamed_left_inserts_keep_view_current(spark, orders, lineitem, tmp_pa
     assert _rows(mj.view(spark)) == want
 
 
+def test_same_checkpoint_replay_changes_nothing(spark, orders, lineitem, tmp_path):
+    """A crash after the sink returned but before Spark committed the
+    epoch: the restart replays the last epoch on the same checkpoint, and
+    the view, the left base and their part files stay as they were."""
+    from mobilitydatalakebenchmark_spark.operators.maintenance import count_data_files
+    from mobilitydatalakebenchmark_spark.streaming.ivm_stream import (
+        stream_to_materialized_join,
+    )
+
+    from .test_run_identity import drop_last_commit
+
+    o1 = orders.filter(F.col("o_orderkey") % 2 == 0)
+    o2 = orders.filter(F.col("o_orderkey") % 2 == 1)
+    mj = MaterializedJoin(str(tmp_path / "mjr"), on="o_orderkey")
+    mj.build(o1, lineitem)
+    landing = str(tmp_path / "landing")
+    o2.repartition(2).write.parquet(landing)
+    ckpt = str(tmp_path / "ckpt")
+
+    def drain():
+        stream = (
+            spark.readStream.schema(o2.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(landing)
+        )
+        q = stream_to_materialized_join(stream, mj, ckpt, row_id_col="o_orderkey")
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    drain()
+    want = _rows(orders.join(lineitem, "o_orderkey"))
+    assert _rows(mj.view(spark)) == want
+    files_before = count_data_files(mj.path)
+    assert drop_last_commit(ckpt) == 1
+    drain()
+    assert _rows(mj.view(spark)) == want
+    assert spark.read.parquet(f"{mj.path}/left.parquet").count() == orders.count()
+    assert count_data_files(mj.path) == files_before
+
+
 def test_crash_between_view_and_base_write_converges(
     spark, orders, lineitem, tmp_path
 ):

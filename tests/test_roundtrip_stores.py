@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import math
+import os
 
 import pytest
 
@@ -227,6 +228,38 @@ class TestTemporal:
             return [r.asDict() for r in df.orderBy("uuid").collect()]
 
         assert sizes(store) == sizes(full)
+
+    def test_write_append_merges_per_uuid(self, spark, tmp_path, documents_df):
+        """``write(mode="append")`` merges into the stored sequences, one
+        row per uuid, like a one-shot write of both batches."""
+        from pyspark.sql import functions as F
+
+        first = documents_df.orderBy("timestamp").limit(10)
+        rest = documents_df.join(first.select("timestamp"), "timestamp", "left_anti")
+        store = TemporalStore(str(tmp_path / "appended"))
+        store.write(first)
+        store.write(rest, mode="append")
+        full = TemporalStore(str(tmp_path / "full"))
+        full.write(documents_df)
+
+        def rows(s):
+            cols = ("uuid", "timerange", "positions", "distance",
+                    "distanceFromPoint", "id", "pointId")
+            return [r.asDict(recursive=True)
+                    for r in s.scan(spark).select(*cols).orderBy("uuid").collect()]
+
+        got = rows(store)
+        assert len(got) == store.scan(spark).select("uuid").distinct().count()
+        assert got == rows(full)
+        assert not [e for e in os.scandir(tmp_path) if e.name.startswith("appended_")]
+
+    def test_first_append_into_missing_path(self, spark, tmp_path, documents_df):
+        store = TemporalStore(str(tmp_path / "t"))
+        store.append_batch(spark, documents_df)
+        full = TemporalStore(str(tmp_path / "full"))
+        full.write(documents_df)
+        count = lambda s: s.scan(spark).groupBy("uuid").count().collect()
+        assert sorted(count(store)) == sorted(count(full))
 
 
 class TestDocumentStores:

@@ -1,72 +1,76 @@
-"""Checkpoint run identity: stable for a checkpoint's lifetime, fresh on
-recreation, atomic under concurrent first attach, URI-parse correct."""
+"""Sink run identity: the ``txn`` handed to ``apply`` carries Spark's
+streaming query id, stable for a checkpoint's lifetime (resume and
+replay keep it) and fresh when the checkpoint is recreated."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
-import threading
 
-from mobilitydatalakebenchmark_spark.streaming.run_identity import (
-    checkpoint_run_id,
-)
+from mobilitydatalakebenchmark_spark.streaming.run_identity import start_sink
 
 
-def test_stable_within_checkpoint_lifetime(tmp_path):
-    ckpt = str(tmp_path / "ckpt")
-    assert checkpoint_run_id(ckpt) == checkpoint_run_id(ckpt)
+def drop_last_commit(checkpoint: str) -> int:
+    """Delete the checkpoint's last commit, the state a crash leaves
+    between the sink returning and Spark committing the epoch, so the
+    next start replays that epoch. Returns the epoch."""
+    commits = os.path.join(checkpoint, "commits")
+    last = max(int(name) for name in os.listdir(commits) if name.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    return last
 
 
-def test_recreated_checkpoint_gets_new_identity(tmp_path):
-    ckpt = str(tmp_path / "ckpt")
-    first = checkpoint_run_id(ckpt)
+def _landing(spark, path: str, values) -> None:
+    # one file per value, so each file is one epoch
+    for v in values:
+        spark.createDataFrame([(v,)], "v long").coalesce(1).write.mode(
+            "append"
+        ).parquet(path)
+
+
+def _drain(spark, landing: str, checkpoint: str) -> list:
+    """Start the sink over ``landing`` and return the txns ``apply`` saw."""
+    txns = []
+    stream = (
+        spark.readStream.schema("v long")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(landing)
+    )
+    q = start_sink(stream, checkpoint, lambda batch, txn: txns.append(txn))
+    q.awaitTermination(120)
+    assert q.exception() is None
+    with open(os.path.join(checkpoint, "metadata")) as fh:
+        assert {run for run, _ in txns} == {json.load(fh)["id"], q.id}
+    return txns
+
+
+def test_stable_within_checkpoint_lifetime(spark, tmp_path):
+    landing, ckpt = str(tmp_path / "landing"), str(tmp_path / "ckpt")
+    _landing(spark, landing, [1, 2])
+    first = _drain(spark, landing, ckpt)
+    assert [epoch for _, epoch in first] == [0, 1]
+    assert len({run for run, _ in first}) == 1
+    # resumed checkpoint: the new file is the next epoch of the same run
+    _landing(spark, landing, [3])
+    assert _drain(spark, landing, ckpt) == [(first[0][0], 2)]
+
+
+def test_replayed_epoch_keeps_its_txn(spark, tmp_path):
+    landing, ckpt = str(tmp_path / "landing"), str(tmp_path / "ckpt")
+    _landing(spark, landing, [1, 2])
+    first = _drain(spark, landing, ckpt)
+    assert drop_last_commit(ckpt) == 1
+    assert _drain(spark, landing, ckpt) == [first[-1]]
+
+
+def test_recreated_checkpoint_gets_new_identity(spark, tmp_path):
+    landing, ckpt = str(tmp_path / "landing"), str(tmp_path / "ckpt")
+    _landing(spark, landing, [1])
+    (run, epoch), = _drain(spark, landing, ckpt)
     shutil.rmtree(ckpt)
-    assert checkpoint_run_id(ckpt) != first
-
-
-def test_file_uri_resolves_to_same_local_dir(tmp_path):
-    # file:///abs/path must hit the same nonce as the bare path — and
-    # must NOT fold a URI authority into the filesystem path
-    ckpt = str(tmp_path / "ckpt")
-    rid = checkpoint_run_id(ckpt)
-    assert os.path.exists(os.path.join(ckpt, "_run_nonce"))
-    # same nonce file, different checkpoint STRING -> ids differ only by
-    # the path component of the hash; what matters is one single nonce
-    checkpoint_run_id("file://" + ckpt)
-    nonces = [n for n in os.listdir(ckpt) if n.startswith("_run_nonce")]
-    assert nonces == ["_run_nonce"]
-    # resuming the bare path still sees its original identity
-    assert checkpoint_run_id(ckpt) == rid
-
-
-def test_remote_authority_does_not_touch_local_fs(tmp_path):
-    # file://somehost/data/ckpt: the authority is a host, not a local
-    # dir — naive prefix-stripping would mkdir /somehost/... (or here,
-    # a relative dir); the id must still be deterministic (path-only)
-    cwd = os.getcwd()
-    os.chdir(tmp_path)
-    try:
-        uri = "file://somehost/data/ckpt"
-        assert checkpoint_run_id(uri) == checkpoint_run_id(uri)
-        assert os.listdir(tmp_path) == []  # nothing created locally
-    finally:
-        os.chdir(cwd)
-
-
-def test_concurrent_first_attach_agrees_on_one_nonce(tmp_path):
-    ckpt = str(tmp_path / "ckpt")
-    ids: list[str] = []
-    barrier = threading.Barrier(8)
-
-    def attach():
-        barrier.wait()
-        ids.append(checkpoint_run_id(ckpt))
-
-    threads = [threading.Thread(target=attach) for _ in range(8)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert len(set(ids)) == 1  # one winner, everyone reads it
-    leftovers = [n for n in os.listdir(ckpt) if n.endswith(".tmp")]
-    assert leftovers == []  # losers cleaned their tmp candidates
+    (run2, epoch2), = _drain(spark, landing, ckpt)
+    assert (epoch, epoch2) == (0, 0)
+    assert run2 != run

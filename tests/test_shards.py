@@ -207,6 +207,45 @@ def test_streamed_shards_replay_safe(spark, documents, tmp_path):
     assert spark.read.parquet(f"{path}/data.parquet").count() == documents.count()
 
 
+def test_same_checkpoint_replay_changes_nothing(spark, documents, tmp_path):
+    """A crash after the sink returned but before Spark committed the
+    epoch: the restart replays the last epoch on the same checkpoint, and
+    the shard store keeps its docs, manifest and part files."""
+    from mobilitydatalakebenchmark_spark.operators.maintenance import count_data_files
+    from mobilitydatalakebenchmark_spark.operators.shards import verify_shards
+    from mobilitydatalakebenchmark_spark.streaming.shard_stream import (
+        stream_to_shards,
+    )
+
+    from .test_run_identity import drop_last_commit
+
+    landing = str(tmp_path / "landing")
+    documents.repartition(3).write.parquet(landing)
+    path, ckpt = str(tmp_path / "streamed"), str(tmp_path / "ckpt")
+
+    def drain():
+        stream = (
+            spark.readStream.schema(documents.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(landing)
+        )
+        q = stream_to_shards(stream, path, ckpt, SHARD_TOKENS)
+        q.awaitTermination(180)
+        assert q.exception() is None
+
+    drain()
+    first = _manifest_rows(spark, path)
+    files_before = count_data_files(path)
+    assert drop_last_commit(ckpt) == 2
+    drain()
+    assert _manifest_rows(spark, path) == first
+    data = spark.read.parquet(f"{path}/data.parquet")
+    assert data.count() == data.select("doc_id").distinct().count() == documents.count()
+    checks = verify_shards(spark, path).collect()
+    assert checks and all(r.ok_docs and r.ok_tokens and r.ok_content for r in checks)
+    assert count_data_files(path) == files_before
+
+
 def test_crash_between_data_and_manifest_is_repaired(spark, documents, tmp_path):
     """The one non-atomic window in the shard store: a crash between a
     batch's data append and its manifest rewrite leaves the manifest

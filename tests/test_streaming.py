@@ -19,6 +19,7 @@ from mobilitydatalakebenchmark_spark.streaming.ingest import (
 )
 
 from .test_roundtrip_flat import _canon_features
+from .test_run_identity import drop_last_commit
 
 
 @pytest.fixture(scope="module")
@@ -111,3 +112,27 @@ def test_fresh_checkpoint_replay_does_not_duplicate(spark, stream_dirs, snapshot
     n_features_expected = sum(len(d["features"]) for _, d in snapshots)
     assert flat.count() == n_features_expected
     assert count_data_files(stream_dirs["table"]) == files_before
+
+
+def test_same_checkpoint_replay_changes_nothing(spark, stream_dirs, tmp_path, snapshots):
+    """A crash after the sink returned but before Spark committed the
+    epoch: the restart replays the last epoch on the same checkpoint, and
+    the timestamp anti-join drops all of it."""
+    table, ckpt = str(tmp_path / "table"), str(tmp_path / "ckpt")
+
+    def drain():
+        q = stream_to_flat_store(
+            read_snapshot_stream(spark, stream_dirs["data"], max_files_per_trigger=16),
+            table,
+            ckpt,
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    drain()
+    files_before = count_data_files(table)
+    assert drop_last_commit(ckpt) > 0
+    drain()
+    n_features_expected = sum(len(d["features"]) for _, d in snapshots)
+    assert spark.read.parquet(table).count() == n_features_expected
+    assert count_data_files(table) == files_before
