@@ -59,7 +59,7 @@ class CantorParquetStore:
         encoded = flat.withColumn("coords_paired", coord_col).drop(
             "coordinates_0", "coordinates_1"
         )
-        write_bucketed(encoded, self.path, mode)
+        write_bucketed(encoded, self.path, mode, entity="uuid")
 
     def scan_decoded(self, spark: SparkSession) -> DataFrame:
         df = spark.read.schema(cantor_schema(self.packed)).parquet(self.path)
@@ -118,7 +118,7 @@ class VelocitySplitParquetStore:
             .drop("coordinates_0", "coordinates_1", "min_lon", "min_lat")
         )
         zone.write.mode(mode).parquet(self._p("doc"))
-        write_bucketed(obs, self._p("obs"), mode)
+        write_bucketed(obs, self._p("obs"), mode, entity="uuid")
 
     def get_document(self, spark: SparkSession, timestamp: str) -> DataFrame:
         zone = (

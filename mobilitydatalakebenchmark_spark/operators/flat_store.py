@@ -11,11 +11,12 @@ driver-side re-nesting). Differences by design (SURVEY.md §2.9):
   writer for every store (``session.get_spark``), 29 % fewer bytes for
   this table on perfbench's ``lake_point_read``.
 
-Scale posture: the write is a single narrow projection (explode+flatten are
-per-row generators — no shuffle) followed by a parquet write partitioned on
-the hour bucket; a year of 20 s snapshots is ~8.8k partitions — fine for any
-metastore-free listing. Point reads prune to one partition and push the
-timestamp equality into the parquet scan (row-group stats skip). Re-nesting
+Scale posture: explode+flatten are per-row generators; ``write_bucketed``
+then shuffles once on the hour bucket, so each write leaves one file per
+hour bucket it touches, each entity's rows together and in time order. A
+year of 20 s snapshots is ~8.8k partitions — fine for any metastore-free
+listing. Point reads prune to one partition and push the timestamp
+equality into the parquet scan (row-group stats skip). Re-nesting
 aggregates only the rows of the requested snapshot(s).
 """
 
@@ -113,12 +114,18 @@ def renest_documents(flat: DataFrame, snapshots: DataFrame | None = None) -> Dat
     return docs.select("timestamp", feature_collection(F.col("features")))
 
 
-def write_bucketed(rows: DataFrame, path: str, mode: str) -> None:
-    """S3: the one write of an observation table — rows keyed by snapshot
-    ``timestamp``, partitioned on its hour bucket (the reference's
-    one-file-per-hour layout, ``apache_parquet.py:17,27``)."""
+def write_bucketed(rows: DataFrame, path: str, mode: str, entity: str) -> None:
+    """S3+S14: the one write of an observation table, partitioned on the
+    hour bucket of its snapshot ``timestamp``. One task writes each bucket,
+    so a write leaves one file per bucket it touches (the reference's
+    ``table_{bucket}.parquet``, ``apache_parquet.py:17,27``), sorted on
+    ``entity`` (the table's moving-object column), then ``timestamp``:
+    TimescaleDB's ``compress_segmentby`` (``timescaledb_store.py:63-64``),
+    which lines up each entity's equal values for Parquet's encoders."""
     (
         rows.withColumn(TS_BUCKET_COL, ts_bucket(F.col("timestamp")))
+        .repartition(TS_BUCKET_COL)
+        .sortWithinPartitions(TS_BUCKET_COL, entity, "timestamp")
         .write.mode(mode)
         .partitionBy(TS_BUCKET_COL)
         .parquet(path)
@@ -138,29 +145,16 @@ def at_snapshot(table: DataFrame, timestamp: str) -> DataFrame:
 class FlatParquetStore:
     """End-to-end store: documents -> partitioned parquet -> point lookups.
 
-    write: S3 (``write_bucketed``, the session's zstd/v2 writer);
+    write: S3+S14 (``write_bucketed``, the session's zstd/v2 writer);
     read: S4+F7 (``at_snapshot``);
     reconstruct: P3.
     """
 
-    def __init__(self, path: str, segment_by: str | None = None):
-        """segment_by: sort rows within each hour partition by this column,
-        then timestamp (S14 — TimescaleDB's compress_segmentby='uuid',
-        timescaledb_store.py:63-64): co-locates each entity's rows inside
-        the parquet row groups, improving both compression (runs of equal
-        values dictionary-encode) and per-entity read locality."""
+    def __init__(self, path: str):
         self.path = path
-        self.segment_by = segment_by
 
     def write(self, documents: DataFrame, mode: str = "overwrite") -> None:
-        flat = explode_features(documents)
-        if self.segment_by:
-            # lead with the bucket: the partitioned write sorts each task
-            # on it and drops any earlier local sort that does not
-            flat = flat.sortWithinPartitions(
-                ts_bucket(F.col("timestamp")), self.segment_by, "timestamp"
-            )
-        write_bucketed(flat, self.path, mode)
+        write_bucketed(explode_features(documents), self.path, mode, entity="uuid")
 
     def scan(self) -> DataFrame:
         return SparkSession.active().read.schema(FLAT_STORE_SCHEMA).parquet(self.path)

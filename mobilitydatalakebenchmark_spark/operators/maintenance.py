@@ -174,16 +174,14 @@ def expire_partitions(
 ) -> list[str]:
     """Delete partitions with bucket < cutoff_bucket (ISO prefixes compare
     lexicographically). Directory-level: surviving partitions untouched.
-    Returns the deleted partition values."""
-    import os
-
+    Returns the deleted partition values; raises ``OSError`` when a
+    delete fails. Lists and deletes through the Hadoop FS."""
     deleted = []
     jvm, fs = _hadoop_fs(spark)
-    for entry in sorted(os.listdir(path)):
-        if not entry.startswith(f"{partition_col}="):
-            continue
-        value = entry.split("=", 1)[1]
-        if value < cutoff_bucket:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{entry}"), True)
-            deleted.append(value)
-    return deleted
+    prefix = f"{partition_col}="
+    for status in fs.listStatus(jvm.org.apache.hadoop.fs.Path(path)):
+        name = status.getPath().getName()
+        if name.startswith(prefix) and name[len(prefix):] < cutoff_bucket:
+            _check(fs.delete(status.getPath(), True), f"delete {path}/{name}")
+            deleted.append(name[len(prefix):])
+    return sorted(deleted)

@@ -92,7 +92,7 @@ class Velocity2ParquetStore:
                 stored = self._read(spark, name).select(key)
                 df_new = df_new.join(stored, key, "left_anti")
             df_new.write.mode(mode).parquet(self._p(name))
-        write_bucketed(obs, self._p("obs"), mode)
+        write_bucketed(obs, self._p("obs"), mode, entity="vehicle_id")
 
     def get_document(self, spark: SparkSession, timestamp: str) -> DataFrame:
         flat = (

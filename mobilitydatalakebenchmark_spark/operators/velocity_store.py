@@ -119,7 +119,7 @@ class VelocityParquetStore:
             l1 = l1.join(self._read(spark, "l1").select("l1_id"), "l1_id", "left_anti")
         main.write.mode(mode).parquet(self._p("main"))
         l1.write.mode(mode).parquet(self._p("l1"))
-        write_bucketed(l2, self._p("l2"), mode)
+        write_bucketed(l2, self._p("l2"), mode, entity="l1_id")
 
     def tables(self, spark: SparkSession) -> tuple[DataFrame, DataFrame, DataFrame]:
         return tuple(self._read(spark, table) for table in ("main", "l1", "l2"))

@@ -13,7 +13,7 @@ poller writes one snapshot per 20 s over a 4 h window
 - ``snapshot_documents``    — Spark scan of that layout into the canonical
   document DataFrame: explicit schema (no inference), filename-derived
   timestamp key; batch or streaming reader.
-- ``read_snapshot_dir``     — the batch scan, ordered, limited.
+- ``read_snapshot_dir``     — the batch scan: one Spark job, no sort.
 
 Scale note: a real deployment reads millions of small JSON files; the Spark
 reader parallelizes over files and the explicit schema avoids a schema-
@@ -149,15 +149,10 @@ def snapshot_documents(reader, path: str, **options: str) -> DataFrame:
     )
 
 
-def read_snapshot_dir(
-    spark: SparkSession, path: str, max_documents: int | None = None
-) -> DataFrame:
-    """S1: scan a snapshot directory into the document DataFrame,
-    ordered by timestamp, limited."""
-    df = snapshot_documents(spark.read, path).orderBy("timestamp")
-    if max_documents is not None:
-        df = df.limit(max_documents)
-    return df
+def read_snapshot_dir(spark: SparkSession, path: str) -> DataFrame:
+    """S1: the batch scan of a snapshot directory, in no particular order;
+    the stores lay their rows out on write (``flat_store.write_bucketed``)."""
+    return snapshot_documents(spark.read, path)
 
 
 def snapshots_to_df(

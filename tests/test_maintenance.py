@@ -65,6 +65,18 @@ def test_expire_partitions(spark, tmp_path, documents_df, snapshots):
     assert remaining.count() == n_last_bucket
 
 
+def test_expire_partitions_raises_on_a_failed_delete(spark, tmp_path, documents_df):
+    """A delete that Hadoop reports as failed is not a deleted partition."""
+    path = str(tmp_path / "exp")
+    _fragmented_table(spark, documents_df, path)
+    jvm, fs = maintenance._hadoop_fs(spark)
+    with pytest.MonkeyPatch.context() as mp:
+        faulty = _FaultyFS(fs, "delete", 1, "false")
+        mp.setattr(maintenance, "_hadoop_fs", lambda _spark: (jvm, faulty))
+        with pytest.raises(OSError):
+            expire_partitions(spark, path, cutoff_bucket="9999")
+
+
 def test_compaction_with_zorder_clusters_files(spark, tmp_path):
     """compact_partitions(zorder=...) preserves the row multiset AND
     tightens per-file spatial envelopes vs plain compaction (the min/max

@@ -7,7 +7,6 @@ tolerance (§2.9 note 9: feature order is unspecified)."""
 
 from __future__ import annotations
 
-import itertools
 import math
 
 import pytest
@@ -47,20 +46,11 @@ def store(tmp_path_factory, documents_df):
     return store
 
 
-@pytest.fixture(scope="module")
-def segmented_store(tmp_path_factory, documents_df):
-    """S14: rows sorted by uuid within each hour partition."""
-    path = str(tmp_path_factory.mktemp("flat_segmented") / "table")
-    store = FlatParquetStore(path, segment_by="uuid")
-    store.write(documents_df)
-    return store
-
-
-def test_roundtrip_all_nonempty(spark, store, segmented_store, snapshots):
+def test_roundtrip_all_nonempty(spark, store, snapshots):
     # probe a spread of snapshots incl. the bucket boundary and the dup-uuid one
     probes = [snapshots[0], snapshots[2], snapshots[-1], snapshots[len(snapshots) // 2]]
-    for (ts, data), s in itertools.product(probes, (store, segmented_store)):
-        rows = s.get_document(ts).collect()
+    for ts, data in probes:
+        rows = store.get_document(ts).collect()
         assert len(rows) == 1
         got = rows[0].asDict(recursive=True)
         assert got["timestamp"] == ts
@@ -72,20 +62,6 @@ def test_roundtrip_all_nonempty(spark, store, segmented_store, snapshots):
             assert len(got_by_uuid[key]) == len(want_by_uuid[key]), key
             for g, w in zip(got_by_uuid[key], want_by_uuid[key]):
                 _assert_feature_eq(g, w)
-
-
-def test_segment_by_sorts_each_file(segmented_store):
-    """The segment order reaches the files: every part file's uuids are
-    non-decreasing."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    files = glob.glob(f"{segmented_store.path}/*/*.parquet")
-    assert files
-    for path in files:
-        uuids = pq.read_table(path, columns=["uuid"]).column("uuid").to_pylist()
-        assert uuids == sorted(uuids), path
 
 
 def test_empty_snapshot_absent_from_flat(store, snapshots):

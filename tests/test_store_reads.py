@@ -1,10 +1,14 @@
-"""Point reads across every store: which keys have a document, and how many
-Spark jobs a read or an append costs."""
+"""Point reads across every store: which keys have a document, how many
+Spark jobs a parse, a read or an append costs, and the files a bucketed
+write leaves."""
 
 from __future__ import annotations
 
+import glob
 import itertools
+import os
 
+import pyarrow.parquet as pq
 import pytest
 
 from mobilitydatalakebenchmark_spark.operators.document_store import DocumentParquetStore
@@ -16,6 +20,10 @@ from mobilitydatalakebenchmark_spark.operators.flat_store import FlatParquetStor
 from mobilitydatalakebenchmark_spark.operators.temporal_store import TemporalStore
 from mobilitydatalakebenchmark_spark.operators.velocity2_store import Velocity2ParquetStore
 from mobilitydatalakebenchmark_spark.operators.velocity_store import VelocityParquetStore
+from mobilitydatalakebenchmark_spark.sources.geojson import (
+    read_snapshot_dir,
+    write_snapshot_dir,
+)
 
 STORES = {
     "flat": FlatParquetStore,
@@ -98,3 +106,50 @@ def test_temporal_append_jobs(spark, tmp_path, batches):
     store = TemporalStore(str(tmp_path / "temporal"))
     store.write(first)
     assert _jobs(spark, lambda: store.append_batch(spark, rest)) <= 2
+
+
+def test_parse_jobs(spark, tmp_path, snapshots):
+    """The snapshot scan runs one job: no global sort, whose range
+    partitioning samples the input first."""
+    write_snapshot_dir(snapshots, str(tmp_path))
+    docs = read_snapshot_dir(spark, str(tmp_path))
+    assert _jobs(spark, docs.write.format("noop").mode("overwrite").save) == 1
+
+
+# the bucketed table of each store and the column naming its entity
+BUCKETED = {
+    "flat": (FlatParquetStore, "", "uuid"),
+    "cantor": (CantorParquetStore, "", "uuid"),
+    "velocity_split": (VelocitySplitParquetStore, "obs", "uuid"),
+    "velocity": (VelocityParquetStore, "l2", "l1_id"),
+    "velocity2": (Velocity2ParquetStore, "obs", "vehicle_id"),
+}
+
+
+def _bucket_files(table: str) -> dict[str, set[str]]:
+    return {
+        os.path.basename(d): set(glob.glob(f"{d}/*.parquet"))
+        for d in glob.glob(f"{table}/ts_bucket=*")
+    }
+
+
+@pytest.mark.parametrize("name", sorted(BUCKETED))
+def test_one_sorted_file_per_bucket(tmp_path, documents_df, snapshots, name):
+    """Each write, the first and an append, adds one part file to every
+    hour bucket it touches, sorted on (entity, timestamp)."""
+    cls, table, entity = BUCKETED[name]
+    store = cls(str(tmp_path / name))
+    path = os.path.join(store.path, table)
+    stamps = [ts for ts, _ in snapshots]
+    halves = [documents_df.filter(documents_df.timestamp.isin(stamps[i::2])) for i in (0, 1)]
+    for half, mode in zip(halves, ("overwrite", "append")):
+        before = _bucket_files(path)
+        store.write(half, mode=mode)
+        after = _bucket_files(path)
+        assert len(after) == 2  # the generated snapshots span two hours
+        for bucket, files in after.items():
+            added = files - before.get(bucket, set())
+            assert len(added) == 1, (mode, bucket, sorted(added))
+            rows = pq.read_table(added.pop(), columns=[entity, "timestamp"]).to_pylist()
+            keys = [(r[entity], r["timestamp"]) for r in rows]
+            assert keys == sorted(keys), (mode, bucket)
