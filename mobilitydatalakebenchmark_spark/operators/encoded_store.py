@@ -98,13 +98,29 @@ class VelocitySplitParquetStore:
         return f"{self.path}/{table}"
 
     def write(self, documents: DataFrame, mode: str = "overwrite") -> None:
-        flat = explode_features(documents)
-        zone = flat.groupBy("timestamp").agg(
-            F.min(F.col("coordinates_0").cast("double")).alias("min_lon"),
-            F.min(F.col("coordinates_1").cast("double")).alias("min_lat"),
-        )
+        """The zone map is computed per document row, over its own
+        features: no aggregate across rows, so the ``doc`` write is one
+        narrow job and ``obs`` carries each document's minima onto its
+        rows with no join. ``doc`` holds one row per non-empty snapshot
+        and gets one part file per write."""
+
+        def lowest(axis: int) -> F.Column:
+            # the minimum of the coordinate as explode_features stores it
+            return F.array_min(
+                F.transform(
+                    "data.features",
+                    lambda f: f["geometry"]["coordinates"][axis]
+                    .cast("float")
+                    .cast("double"),
+                )
+            )
+
+        zoned = documents.withColumns({"min_lon": lowest(0), "min_lat": lowest(1)})
+        zoned.filter(F.size("data.features") > 0).select(
+            "timestamp", "min_lon", "min_lat"
+        ).coalesce(1).write.mode(mode).parquet(self._p("doc"))
         obs = (
-            flat.join(F.broadcast(zone), "timestamp")
+            explode_features(zoned, "min_lon", "min_lat")
             .withColumns(
                 {
                     "lon_fp": encode_fixed_point(
@@ -117,7 +133,6 @@ class VelocitySplitParquetStore:
             )
             .drop("coordinates_0", "coordinates_1", "min_lon", "min_lat")
         )
-        zone.write.mode(mode).parquet(self._p("doc"))
         write_bucketed(obs, self._p("obs"), mode, entity="uuid")
 
     def get_document(self, spark: SparkSession, timestamp: str) -> DataFrame:

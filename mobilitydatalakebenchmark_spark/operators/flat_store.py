@@ -29,9 +29,10 @@ from ..functions.codecs import decode_direction, encode_direction, ts_bucket
 from ..schemas import FLAT_STORE_SCHEMA, TS_BUCKET_COL, TS_BUCKET_LEN
 
 
-def explode_features(documents: DataFrame) -> DataFrame:
+def explode_features(documents: DataFrame, *carry: str) -> DataFrame:
     """P1+P2: one row per (snapshot, feature), properties/geometry flattened
-    to the canonical flat schema (FIXTURES.md §A.2).
+    to the canonical flat schema (FIXTURES.md §A.2), followed by the
+    per-document columns named in ``carry``.
 
     ``explode`` (not outer): snapshots with zero features vanish from the
     flat table, matching the reference write loop (`apache_parquet.py:43`);
@@ -39,7 +40,7 @@ def explode_features(documents: DataFrame) -> DataFrame:
     need it (velocity main table keeps every timestamp).
     """
     f = F.explode("data.features").alias("f")
-    return documents.select("timestamp", f).select(
+    return documents.select("timestamp", f, *carry).select(
         "timestamp",
         F.col("f.properties.uuid").alias("uuid"),
         F.col("f.properties.id").alias("id"),
@@ -51,6 +52,7 @@ def explode_features(documents: DataFrame) -> DataFrame:
         F.col("f.properties.pointId").cast("short").alias("pointId"),
         F.col("f.geometry.coordinates").getItem(0).cast("float").alias("coordinates_0"),
         F.col("f.geometry.coordinates").getItem(1).cast("float").alias("coordinates_1"),
+        *carry,
     )
 
 

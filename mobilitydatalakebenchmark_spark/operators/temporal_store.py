@@ -12,9 +12,8 @@ an ``exists`` over instants. Every flat row is a one-instant partial
 sequence, and one per-uuid merge turns partial or stored sequences into
 stored ones, so a write merges the batch's partials and an append (W4/J9)
 merges the stored rows with them — recompute-per-batch, O(history)
-(Delta MERGE would do keyed upserts; without the Delta jars the pure
-recompute path is canonical and the MERGE path is stubbed in
-``delta_store.py``).
+(a Delta MERGE would do keyed upserts; the package does not depend on
+Delta, so the recompute path is the one path).
 
 Scale posture: one shuffle on uuid builds every sequence (groupBy +
 sort_array(flatten(collect_list))); per-entity arrays are bounded by the

@@ -91,7 +91,8 @@ class Velocity2ParquetStore:
                 # J7/J8: novelty anti-join per dim level
                 stored = self._read(spark, name).select(key)
                 df_new = df_new.join(stored, key, "left_anti")
-            df_new.write.mode(mode).parquet(self._p(name))
+            # both dims are bounded by the fleet: one part file per write
+            df_new.coalesce(1).write.mode(mode).parquet(self._p(name))
         write_bucketed(obs, self._p("obs"), mode, entity="vehicle_id")
 
     def get_document(self, spark: SparkSession, timestamp: str) -> DataFrame:

@@ -16,7 +16,8 @@ Spark-first deviations (documented, SURVEY.md §2.9 / §7):
   left-anti novelty join (F4/J8) against the stored dim.
 
 Scale posture: main is tiny (1 row/snapshot); l1 is bounded by the fleet
-size (broadcastable); l2 is the fact table, written by ``write_bucketed``.
+size (broadcastable); both are written as one part file per write. l2 is
+the fact table, written by ``write_bucketed``.
 Point reads prune l2 to one partition, broadcast-join l1, and re-nest
 against the main hit, which alone decides whether the snapshot exists.
 """
@@ -117,8 +118,10 @@ class VelocityParquetStore:
             # J7/J8/F4: only novel dim rows are appended (existence probe
             # as left-anti join against the stored dim)
             l1 = l1.join(self._read(spark, "l1").select("l1_id"), "l1_id", "left_anti")
-        main.write.mode(mode).parquet(self._p("main"))
-        l1.write.mode(mode).parquet(self._p("l1"))
+        # main and l1 are small by construction (see the scale posture):
+        # one part file per write
+        main.coalesce(1).write.mode(mode).parquet(self._p("main"))
+        l1.coalesce(1).write.mode(mode).parquet(self._p("l1"))
         write_bucketed(l2, self._p("l2"), mode, entity="l1_id")
 
     def tables(self, spark: SparkSession) -> tuple[DataFrame, DataFrame, DataFrame]:

@@ -1164,10 +1164,10 @@ def versioned_compact_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deliberately NOT coalesced: the whole point is many small files
     for m in range(4):
         store.commit(orders.filter(F.col("o_orderkey") % 4 == m))
-    files_before = len(store.data_files(spark))
+    files_before = len(store.data_files())
     v1_rows = store.snapshot(spark, version=1).count()
     store.compact(spark, target_files=2)
-    files_after = len(store.data_files(spark))
+    files_after = len(store.data_files())
     # time travel must survive compaction: v1 still readable, unchanged
     v1_rows_after = store.snapshot(spark, version=1).count()
     return (

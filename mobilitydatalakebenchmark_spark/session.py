@@ -111,8 +111,8 @@ def local_df(spark: SparkSession, rows: list, schema: str):
     relation roughly 10x slower PER ACTION on this stack (measured
     2.7-4.1 s vs 0.2-0.4 s for a one-row manifest write) — it pickles
     through the legacy parallelize path, while a pandas input rides
-    Arrow. Every hot-path site (per-commit manifests, per-epoch stream
-    state, per-query centroid tables) goes through here; ``rows`` is a
+    Arrow. Every hot-path site (per-query centroid tables and the
+    other small driver-built frames) goes through here; ``rows`` is a
     list of tuples and ``schema`` a DDL string whose names are taken
     column-wise."""
     import pandas as pd

@@ -138,8 +138,8 @@ def stream_to_ann_index(
     A duplicate id can never double-append code/list rows (which would
     silently double ADC/cosine scores). Cost: one scan of the store's id
     column per micro-batch — the price of idempotence without a
-    transactional sink; with Delta available this becomes a MERGE and
-    the scan goes away."""
+    transactional sink; a per-table commit log recording each batch's
+    keys would skip a replay before any scan."""
 
     def flush(batch: DataFrame, txn: Txn) -> None:
         # idempotent append: drop ids the store already holds, via a

@@ -8,9 +8,9 @@ one narrow shuffle over the batch, not the history), then
 partitions (late data reopens just its own bucket), merges old + new
 states exactly (`merge_rollup` — sums of sums, min of mins) and rewrites
 those partitions alone. Cost per batch is O(batch + touched-bucket
-states), independent of table history length. With Delta available the
-read-merge-rewrite collapses into `MERGE INTO`
-(operators/delta_store.py is the gated variant).
+states), independent of table history length. With Delta the
+read-merge-rewrite would collapse into `MERGE INTO`; the package does not
+depend on Delta.
 """
 
 from __future__ import annotations

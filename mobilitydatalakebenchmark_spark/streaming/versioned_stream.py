@@ -1,14 +1,16 @@
-"""Streaming commits into the manifest-versioned store: each micro-batch
-becomes one atomically-visible version, giving readers a consistent
-snapshot between epochs and readable history across them — the plain-
-parquet analogue of a Delta streaming sink.
+"""Streaming commits into the versioned store: each micro-batch becomes
+one atomically-visible version, giving readers a consistent snapshot
+between epochs and readable history across them — the plain-parquet
+analogue of a Delta streaming sink.
 
 Replay protection is the TRANSACTION STAMP (see ``run_identity.py``):
-``commit(txn=(run, epoch))`` skips a transaction any manifest already
-records, closing the crash window between the data write and the
-manifest write (the data-dir overwrite reclaims the crashed attempt's
-orphan). One checkpoint lineage owns a store: attaching a fresh
-checkpoint appends its batches as new versions by contract.
+``commit(txn=(run, epoch))`` skips a transaction any commit entry
+already records, checked on the driver with no Spark job. That closes
+the crash window between the data write and the entry's publish (the
+data-dir overwrite reclaims the crashed attempt's orphan). An epoch
+costs two jobs: the emptiness probe and the data write. One checkpoint
+lineage owns a store: attaching a fresh checkpoint appends its batches
+as new versions by contract.
 """
 
 from __future__ import annotations

@@ -1,12 +1,10 @@
-"""P13 byte-packing round trip + Delta stub behavior."""
+"""P13 byte-packing round trip and null pass-through."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from mobilitydatalakebenchmark_spark.functions import codecs
-from mobilitydatalakebenchmark_spark.operators import delta_store
 
 
 def test_pack_unpack_roundtrip(spark):
@@ -32,17 +30,3 @@ def test_pack_null_passthrough(spark):
     out = df.select(codecs.pack_le_bytes(F.col("z")).alias("b")).collect()
     assert out[0].b is None
 
-
-@pytest.mark.skipif(delta_store.HAS_DELTA, reason="delta present: stub paths n/a")
-def test_delta_unavailable_error_is_clear(spark, documents_df):
-    store = delta_store.DeltaDocumentStore("/tmp/never-created")
-    with pytest.raises(delta_store.DeltaUnavailable, match="parquet stores"):
-        store.append(documents_df)
-
-
-@pytest.mark.skipif(not delta_store.HAS_DELTA, reason="delta not installed")
-def test_delta_roundtrip(spark, documents_df, tmp_path):  # pragma: no cover
-    store = delta_store.DeltaDocumentStore(str(tmp_path / "d"))
-    store.append(documents_df)
-    ts = documents_df.limit(1).collect()[0].timestamp
-    assert store.get_document(spark, ts).count() == 1

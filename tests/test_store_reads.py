@@ -153,3 +153,34 @@ def test_one_sorted_file_per_bucket(tmp_path, documents_df, snapshots, name):
             rows = pq.read_table(added.pop(), columns=[entity, "timestamp"]).to_pylist()
             keys = [(r[entity], r["timestamp"]) for r in rows]
             assert keys == sorted(keys), (mode, bucket)
+
+
+def test_velocity_split_write_jobs(spark, tmp_path, batches):
+    """The zone map is computed once, per document: the doc write is one
+    job, and the obs write is write_bucketed's shuffle and write."""
+    first, rest = batches
+    store = VelocitySplitParquetStore(str(tmp_path / "velocity_split"))
+    assert _jobs(spark, lambda: store.write(first)) <= 3
+    assert _jobs(spark, lambda: store.write(rest, mode="append")) <= 3
+
+
+# the small tables of the normalized stores: one row per snapshot, or
+# bounded by the fleet
+SMALL = {
+    "velocity": (VelocityParquetStore, ("main", "l1")),
+    "velocity2": (Velocity2ParquetStore, ("bus", "vehicle")),
+}
+
+
+@pytest.mark.parametrize("name", sorted(SMALL))
+def test_small_tables_one_file_per_write(tmp_path, batches, name):
+    """A write and an append each add at most one part file to every
+    small table, whatever the batch's partitioning."""
+    cls, tables = SMALL[name]
+    store = cls(str(tmp_path / name))
+    for batch, mode in zip(batches, ("overwrite", "append")):
+        before = {t: set(glob.glob(f"{store.path}/{t}/*.parquet")) for t in tables}
+        store.write(batch.repartition(4), mode=mode)
+        for t in tables:
+            added = set(glob.glob(f"{store.path}/{t}/*.parquet")) - before[t]
+            assert len(added) <= 1, (mode, t, sorted(added))

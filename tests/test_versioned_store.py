@@ -12,6 +12,8 @@ from mobilitydatalakebenchmark_spark.operators.versioned_store import (
     VersionedParquetStore,
 )
 
+from .test_store_reads import _jobs
+
 
 @pytest.fixture()
 def batches(spark):
@@ -134,7 +136,7 @@ def test_vacuum_safe_under_path_aliases(spark, batches, tmp_path):
     ]
     for alias in aliases:
         s2 = VersionedParquetStore(alias)
-        deleted = s2.vacuum(keep_latest=2, spark=spark)
+        deleted = s2.vacuum(keep_latest=2)
         # only version 0's dir may go (history pruning), never v1/v2
         assert all(d.rstrip("/").endswith("v0") or "v0" not in d for d in deleted)
         assert s2.snapshot(spark).count() == 30
@@ -161,18 +163,61 @@ def test_store_is_relocatable(spark, batches, tmp_path):
     assert s2.snapshot(spark, version=0).count() == 10
 
 
-def test_vacuum_without_active_session_raises(spark, batches, tmp_path):
-    """No silent getActiveSession()=None crash mid-delete: the guard
-    raises before touching anything (can't simulate a missing session
-    here, so assert the explicit spark= path works and returns)."""
+def test_vacuum_needs_no_session(spark, batches, tmp_path):
+    """Vacuum works on the store's entries and dirs alone: no session
+    argument, no active session looked up."""
     s = VersionedParquetStore(str(tmp_path / "v"))
     for b in batches[:2]:
         s.commit(b)
     # append-mode manifests reference every prior dir, so pruning v0's
     # manifest deletes no data — only the history entry goes
-    assert s.vacuum(keep_latest=1, spark=spark) == []
+    assert s.vacuum(keep_latest=1) == []
     assert s.history() == [1]
     assert s.snapshot(spark).count() == 20
+
+
+def test_metadata_runs_no_spark_job(spark, tmp_path):
+    """Entries are written and resolved on the driver: a commit costs its
+    data write alone, and nothing else the store does runs a job."""
+    s = VersionedParquetStore(str(tmp_path / "vs"))
+    batch = spark.range(0, 1000)
+    assert _jobs(spark, lambda: s.commit(batch)) == 1
+    assert _jobs(spark, lambda: s.commit(batch, txn=("run", 0))) == 1
+    assert _jobs(spark, lambda: s.commit(batch, txn=("run", 0))) == 0  # replayed
+    assert s.history() == [0, 1]
+    for call in (
+        lambda: s.snapshot(spark),
+        lambda: s.committed_txn_version(("run", 0)),
+        s.data_files,
+        s.history,
+        s.latest_version,
+        lambda: s.vacuum(keep_latest=1),
+    ):
+        assert _jobs(spark, call) == 0
+
+
+def test_crash_before_publish_keeps_previous_version(spark, batches, tmp_path, monkeypatch):
+    """A commit killed between writing its entry and publishing it leaves
+    a temp entry no reader counts: the previous version stays latest,
+    readable and committable, and vacuum reclaims the temp entry."""
+    s = VersionedParquetStore(str(tmp_path / "vs"))
+    s.commit(batches[0])
+
+    def killed(src, dst):
+        raise OSError("killed before publish")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "link", killed)
+        with pytest.raises(OSError, match="before publish"):
+            s.commit(batches[1])
+    manifests = tmp_path / "vs" / "_manifests"
+    assert [n for n in os.listdir(manifests) if n.startswith(".")]
+    assert s.latest_version() == 0
+    assert s.snapshot(spark).count() == 10
+    assert s.commit(batches[2]) == 1
+    assert {r.b for r in s.snapshot(spark).select("b").distinct().collect()} == {0, 2}
+    s.vacuum(keep_latest=2)
+    assert sorted(os.listdir(manifests)) == ["0.json", "1.json"]
 
 
 def test_compact_preserves_rows_and_time_travel(spark, batches, tmp_path):
@@ -182,12 +227,12 @@ def test_compact_preserves_rows_and_time_travel(spark, batches, tmp_path):
     before = sorted(
         (r.id, r.b) for r in s.snapshot(spark).collect()
     )
-    files_before = len(s.data_files(spark))
+    files_before = len(s.data_files())
     v = s.compact(spark, target_files=1)
     assert v == 3  # compaction is a NEW version
     # logical rows unchanged, file count shrank
     assert sorted((r.id, r.b) for r in s.snapshot(spark).collect()) == before
-    assert len(s.data_files(spark)) < files_before
+    assert len(s.data_files()) < files_before
     # pre-compaction versions still time-travel
     assert s.snapshot(spark, 1).count() == 20
 
@@ -197,7 +242,7 @@ def test_vacuum_after_compact_keeps_compacted_version(spark, batches, tmp_path):
     for b in batches:
         s.commit(b)
     s.compact(spark, target_files=1)
-    removed = s.vacuum(keep_latest=1, spark=spark)
+    removed = s.vacuum(keep_latest=1)
     assert removed  # the three pre-compaction dirs are reclaimable
     assert s.snapshot(spark).count() == 30  # compacted version intact
 
