@@ -4,12 +4,10 @@ The reference's as-of capability is a scalar lookup (W3,
 ``mobility_db.py:104-109``); generalized here to full JOIN operators:
 
 - ``asof_join``: for every left row, attach the latest right row at or
-  before its timestamp (per key). Two strategies:
-  * 'union'  — tag and union both sides, one sort per key partition,
-    last-non-null window. ONE shuffle total, no per-row probing; the
-    100 TB path.
-  * 'pandas' — per-key ``pd.merge_asof`` via applyInPandas (Arrow
-    kernel); wins when the per-key data is small but keys are many.
+  before its timestamp (per key): tag and union both sides, one sort per
+  key partition, last-non-null window. ONE shuffle total, no per-row
+  probing (``pd.merge_asof`` semantics with ``direction="backward"``,
+  without leaving the JVM).
 - ``range_join``: equi-join a fact column into [lo, hi) interval tables.
   Broadcast-able dims go through a broadcast range join; big-big goes
   through interval bucketization -> equi-join on bucket + residual filter
@@ -18,9 +16,7 @@ The reference's as-of capability is a scalar lookup (W3,
 
 from __future__ import annotations
 
-import pandas as pd
-
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -30,7 +26,6 @@ def asof_join(
     on: str = "ts",
     by: str | list[str] = "key",
     value_cols: list[str] | None = None,
-    strategy: str = "union",
 ) -> DataFrame:
     """Left rows + latest right values at-or-before left.on, per `by` key.
 
@@ -48,9 +43,6 @@ def asof_join(
             "columns; rename the right side (e.g. .withColumnRenamed) first — "
             "a silent overlap would corrupt the as-of fill."
         )
-    if strategy == "pandas":
-        return _asof_join_pandas(left, right, on, by_cols, value_cols)
-
     l_tag = left.withColumn("_side", F.lit(1))
     r_tag = right.withColumn("_side", F.lit(0))
     # superset schema: each side gets the other's missing columns as NULL
@@ -79,59 +71,12 @@ def asof_join(
     return both.filter(F.col("_side") == 1).drop("_side", *value_cols)
 
 
-def _asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    by_cols: list[str],
-    value_cols: list[str],
-) -> DataFrame:
-    l_cols = left.columns
-    out_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in left.schema.fields
-    )
-    right_schema = {f.name: f.dataType.simpleString() for f in right.schema.fields}
-    out_schema = out_fields + ", " + ", ".join(
-        f"asof_{c} {right_schema[c]}" for c in value_cols
-    )
-
-    l_tag = left.withColumn("_side", F.lit(1))
-    r_tag = right.withColumn("_side", F.lit(0))
-    for c in l_cols:
-        if c not in r_tag.columns:
-            r_tag = r_tag.withColumn(c, F.lit(None).cast(dict(left.dtypes)[c]))
-    for c in value_cols:
-        if c not in l_tag.columns:
-            l_tag = l_tag.withColumn(c, F.lit(None).cast(dict(right.dtypes)[c]))
-    cols = list(dict.fromkeys(by_cols + [on, "_side"] + value_cols + l_cols))
-    both = l_tag.select(*cols).unionByName(r_tag.select(*cols))
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        lp = pdf[pdf["_side"] == 1]
-        rp = pdf[pdf["_side"] == 0]
-        lp = lp.sort_values([on] + by_cols, kind="mergesort")
-        rp = rp.sort_values([on] + by_cols, kind="mergesort")
-        merged = pd.merge_asof(
-            lp[l_cols],
-            rp[by_cols + [on] + value_cols].rename(
-                columns={c: f"asof_{c}" for c in value_cols}
-            ),
-            on=on,
-            by=by_cols,
-            direction="backward",
-        )
-        return merged
-
-    return both.groupBy(*by_cols).applyInPandas(merge, out_schema)
-
-
 def range_join(
     fact: DataFrame,
     intervals: DataFrame,
     value_col: str,
     lo_col: str = "lo",
     hi_col: str = "hi",
-    broadcast_intervals: bool = True,
     bucket_width: float | None = None,
 ) -> DataFrame:
     """fact ⋈ intervals ON lo <= value < hi.
@@ -143,8 +88,7 @@ def range_join(
     v = F.col(value_col)
     cond = (v >= F.col(lo_col)) & (v < F.col(hi_col))
     if bucket_width is None:
-        iv = F.broadcast(intervals) if broadcast_intervals else intervals
-        return fact.join(iv, cond)
+        return fact.join(F.broadcast(intervals), cond)
     fb = fact.withColumn("_bucket", F.floor(v / F.lit(bucket_width)))
     ib = intervals.withColumn(
         "_bucket",

@@ -23,37 +23,28 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import DOCUMENT_SCHEMA
+from .store import Store
 
 
-class DocumentParquetStore:
+class DocumentParquetStore(Store):
     """S9: one nested document per row, keyed by timestamp."""
 
-    def __init__(self, path: str):
-        self.path = path
+    schemas = {"": DOCUMENT_SCHEMA}
 
     def write(self, documents: DataFrame, mode: str = "overwrite") -> None:
         documents.write.mode(mode).parquet(self.path)
 
     def get_document(self, spark: SparkSession, timestamp: str) -> DataFrame:
         # timestamp equality prunes parquet row groups via min/max stats
-        return (
-            spark.read.schema(DOCUMENT_SCHEMA)
-            .parquet(self.path)
-            .filter(F.col("timestamp") == timestamp)
-        )
-
-    def total_size(self) -> int:
-        from ..sources.size import dir_size
-
-        return dir_size(self.path)
+        return self._read(spark).filter(F.col("timestamp") == timestamp)
 
 
-class GzipJsonStore:
+class GzipJsonStore(Store):
     """S11/S12: gzip JSON sink. ``single_file=True`` reproduces the
     all-in-one variant (one file, linear scan on read)."""
 
     def __init__(self, path: str, single_file: bool = False):
-        self.path = path
+        super().__init__(path)
         self.single_file = single_file
 
     def write(self, documents: DataFrame, mode: str = "overwrite") -> None:
@@ -66,11 +57,6 @@ class GzipJsonStore:
             .json(self.path)
             .filter(F.col("timestamp") == timestamp)
         )
-
-    def total_size(self) -> int:
-        from ..sources.size import dir_size
-
-        return dir_size(self.path)
 
 
 def documents_as_json(documents: DataFrame) -> DataFrame:

@@ -34,9 +34,10 @@ from ..schemas import (
     cantor_schema,
 )
 from .flat_store import at_snapshot, explode_features, renest_documents, write_bucketed
+from .store import Store
 
 
-class CantorParquetStore:
+class CantorParquetStore(Store):
     """Flat store with paired+packed coordinates (P12/P13).
 
     ``packed=True`` stores the 15-byte binary exactly like the reference's
@@ -45,8 +46,9 @@ class CantorParquetStore:
     coordinates only (offset=0), matching the reference's domain."""
 
     def __init__(self, path: str, packed: bool = True):
-        self.path = path
+        super().__init__(path)
         self.packed = packed
+        self.schemas = {"": cantor_schema(packed)}
 
     def write(self, documents: DataFrame, mode: str = "overwrite") -> None:
         flat = explode_features(documents)
@@ -62,7 +64,7 @@ class CantorParquetStore:
         write_bucketed(encoded, self.path, mode, entity="uuid")
 
     def scan_decoded(self, spark: SparkSession) -> DataFrame:
-        df = spark.read.schema(cantor_schema(self.packed)).parquet(self.path)
+        df = self._read(spark)
         z = (
             unpack_le_bytes(F.col("coords_paired"))
             if self.packed
@@ -79,23 +81,14 @@ class CantorParquetStore:
     def get_document(self, spark: SparkSession, timestamp: str) -> DataFrame:
         return renest_documents(at_snapshot(self.scan_decoded(spark), timestamp))
 
-    def total_size(self) -> int:
-        from ..sources.size import dir_size
 
-        return dir_size(self.path)
-
-
-class VelocitySplitParquetStore:
+class VelocitySplitParquetStore(Store):
     """Zone-mapped fixed-point store (A4 + P11).
 
     doc table: (timestamp, min_lon, min_lat) — the per-document zone map;
     obs table: coordinates as long offsets from the zone minimum."""
 
-    def __init__(self, path: str):
-        self.path = path
-
-    def _p(self, table: str) -> str:
-        return f"{self.path}/{table}"
+    schemas = {"doc": VELOCITY_SPLIT_DOC_SCHEMA, "obs": VELOCITY_SPLIT_OBS_SCHEMA}
 
     def write(self, documents: DataFrame, mode: str = "overwrite") -> None:
         """The zone map is computed per document row, over its own
@@ -136,14 +129,8 @@ class VelocitySplitParquetStore:
         write_bucketed(obs, self._p("obs"), mode, entity="uuid")
 
     def get_document(self, spark: SparkSession, timestamp: str) -> DataFrame:
-        zone = (
-            spark.read.schema(VELOCITY_SPLIT_DOC_SCHEMA)
-            .parquet(self._p("doc"))
-            .filter(F.col("timestamp") == timestamp)
-        )
-        obs = at_snapshot(
-            spark.read.schema(VELOCITY_SPLIT_OBS_SCHEMA).parquet(self._p("obs")), timestamp
-        )
+        zone = self._read(spark, "doc").filter(F.col("timestamp") == timestamp)
+        obs = at_snapshot(self._read(spark, "obs"), timestamp)
         flat = (
             obs.join(F.broadcast(zone), "timestamp")
             .withColumns(
@@ -159,8 +146,3 @@ class VelocitySplitParquetStore:
             .drop("lon_fp", "lat_fp", "min_lon", "min_lat")
         )
         return renest_documents(flat)
-
-    def total_size(self) -> int:
-        from ..sources.size import dir_size
-
-        return dir_size(self.path)

@@ -12,8 +12,9 @@ driver-side re-nesting). Differences by design (SURVEY.md §2.9):
   this table on perfbench's ``lake_point_read``.
 
 Scale posture: explode+flatten are per-row generators; ``write_bucketed``
-then shuffles once on the hour bucket, so each write leaves one file per
-hour bucket it touches, each entity's rows together and in time order. A
+then rebalances once on the hour bucket, so each write leaves one file per
+hour bucket it touches (more for a bucket past the advisory partition
+size), each entity's rows together and in time order. A
 year of 20 s snapshots is ~8.8k partitions — fine for any metastore-free
 listing. Point reads prune to one partition and push the timestamp
 equality into the parquet scan (row-group stats skip). Re-nesting
@@ -27,6 +28,8 @@ from pyspark.sql import functions as F
 
 from ..functions.codecs import decode_direction, encode_direction, ts_bucket
 from ..schemas import FLAT_STORE_SCHEMA, TS_BUCKET_COL, TS_BUCKET_LEN
+from .maintenance import recover_for_write
+from .store import Store
 
 
 def explode_features(documents: DataFrame, *carry: str) -> DataFrame:
@@ -118,15 +121,21 @@ def renest_documents(flat: DataFrame, snapshots: DataFrame | None = None) -> Dat
 
 def write_bucketed(rows: DataFrame, path: str, mode: str, entity: str) -> None:
     """S3+S14: the one write of an observation table, partitioned on the
-    hour bucket of its snapshot ``timestamp``. One task writes each bucket,
-    so a write leaves one file per bucket it touches (the reference's
-    ``table_{bucket}.parquet``, ``apache_parquet.py:17,27``), sorted on
-    ``entity`` (the table's moving-object column), then ``timestamp``:
-    TimescaleDB's ``compress_segmentby`` (``timescaledb_store.py:63-64``),
-    which lines up each entity's equal values for Parquet's encoders."""
+    hour bucket of its snapshot ``timestamp``. The rows are rebalanced on
+    the bucket: one task writes each bucket up to Spark's advisory
+    partition size (``spark.sql.adaptive.advisoryPartitionSizeInBytes``)
+    and AQE splits a bucket past it, so a write leaves one file per bucket
+    it touches (the reference's ``table_{bucket}.parquet``,
+    ``apache_parquet.py:17,27``) until a busy hour outgrows one file. Each
+    file is sorted on ``entity`` (the table's moving-object column), then
+    ``timestamp``: TimescaleDB's ``compress_segmentby``
+    (``timescaledb_store.py:63-64``), which lines up each entity's equal
+    values for Parquet's encoders. A swap a crashed compaction cut short
+    is finished first (``recover_for_write``)."""
+    recover_for_write(rows.sparkSession, path)
     (
         rows.withColumn(TS_BUCKET_COL, ts_bucket(F.col("timestamp")))
-        .repartition(TS_BUCKET_COL)
+        .hint("rebalance", TS_BUCKET_COL)
         .sortWithinPartitions(TS_BUCKET_COL, entity, "timestamp")
         .write.mode(mode)
         .partitionBy(TS_BUCKET_COL)
@@ -144,7 +153,7 @@ def at_snapshot(table: DataFrame, timestamp: str) -> DataFrame:
     )
 
 
-class FlatParquetStore:
+class FlatParquetStore(Store):
     """End-to-end store: documents -> partitioned parquet -> point lookups.
 
     write: S3+S14 (``write_bucketed``, the session's zstd/v2 writer);
@@ -152,20 +161,13 @@ class FlatParquetStore:
     reconstruct: P3.
     """
 
-    def __init__(self, path: str):
-        self.path = path
+    schemas = {"": FLAT_STORE_SCHEMA}
 
     def write(self, documents: DataFrame, mode: str = "overwrite") -> None:
         write_bucketed(explode_features(documents), self.path, mode, entity="uuid")
 
     def scan(self) -> DataFrame:
-        return SparkSession.active().read.schema(FLAT_STORE_SCHEMA).parquet(self.path)
+        return self._read(SparkSession.active())
 
     def get_document(self, timestamp: str) -> DataFrame:
         return renest_documents(at_snapshot(self.scan(), timestamp))
-
-    def total_size(self) -> int:
-        from ..sources.size import dir_size
-
-        return dir_size(self.path)
-

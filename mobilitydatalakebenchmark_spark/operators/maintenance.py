@@ -11,7 +11,10 @@ flat store; small-file proliferation is the classic lake failure mode.
   than a cutoff without touching surviving data (directory-level delete;
   no rewrite).
 - ``replace_dir`` / ``recover_dir``: the one crash-safe commit of a
-  whole directory, for every store that rewrites itself.
+  whole directory, for every store that rewrites itself; every read of
+  a store table (``store.Store``) recovers first, and every writer that
+  does not swap (``flat_store.write_bucketed``, ``expire_partitions``)
+  runs ``recover_for_write`` first.
 """
 
 from __future__ import annotations
@@ -19,7 +22,7 @@ from __future__ import annotations
 import math
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import TS_BUCKET_COL
@@ -66,6 +69,18 @@ def recover_dir(spark: SparkSession, dst: str) -> None:
     _check(fs.delete(aside, True), f"delete {dst + _REPLACED}")
 
 
+def recover_for_write(spark: SparkSession, dst: str) -> None:
+    """A writer's first step on ``dst``: ``recover_dir``, then delete a
+    pending dir no swap took up. Writers of a directory are single (see
+    ``replace_dir``), so to a writer that dir is a rewrite that crashed
+    before its swap; readers leave it, as it may be one in progress."""
+    recover_dir(spark, dst)
+    jvm, fs = _hadoop_fs(spark)
+    pending = jvm.org.apache.hadoop.fs.Path(dst + _PENDING)
+    if fs.exists(pending):
+        _check(fs.delete(pending, True), f"delete {dst + _PENDING}")
+
+
 def replace_dir(spark: SparkSession, dst: str, write: Callable[[str], None]) -> None:
     """Rewrite directory ``dst`` as one crash-safe commit (Hadoop FS API).
 
@@ -93,14 +108,14 @@ def replace_dir(spark: SparkSession, dst: str, write: Callable[[str], None]) -> 
 def compact_partitions(
     spark: SparkSession,
     path: str,
-    partition_col: str = TS_BUCKET_COL,
     target_file_bytes: int = 128 * 1024 * 1024,
     zorder: tuple[str, str, tuple[float, float], tuple[float, float]] | None = None,
 ) -> dict:
-    """Rewrite `path` with ~target_file_bytes files per partition.
+    """Rewrite `path` with ~target_file_bytes files per hour-bucket
+    partition.
 
     Per-partition output file count = ceil(partition_bytes / target); the
-    rewrite repartitions by (partition_col, uniform salt) so each output
+    rewrite repartitions by (bucket, uniform salt) so each output
     task writes one file of its own partition. The rewrite lands in a
     pending sibling directory and is swapped in by ``replace_dir``.
 
@@ -114,7 +129,7 @@ def compact_partitions(
     recover_dir(spark, path)
     total_bytes = dir_size(path)
     df = spark.read.parquet(path)
-    n_parts = max(df.select(partition_col).distinct().count(), 1)
+    n_parts = max(df.select(TS_BUCKET_COL).distinct().count(), 1)
     per_partition = max(total_bytes // n_parts, 1)
     files_per_partition = max(1, math.ceil(per_partition / target_file_bytes))
 
@@ -132,22 +147,22 @@ def compact_partitions(
         out = (
             df.withColumn("_z", zk)
             .repartitionByRange(
-                n_parts * files_per_partition, F.col(partition_col), F.col("_z")
+                n_parts * files_per_partition, F.col(TS_BUCKET_COL), F.col("_z")
             )
-            .sortWithinPartitions(partition_col, "_z")
+            .sortWithinPartitions(TS_BUCKET_COL, "_z")
             .drop("_z")
         )
     else:
         out = df.repartition(
             n_parts * files_per_partition,
-            F.col(partition_col),
+            F.col(TS_BUCKET_COL),
             F.pmod(
                 F.spark_partition_id() + F.monotonically_increasing_id(),
                 files_per_partition,
             ),
         )
     replace_dir(
-        spark, path, out.write.mode("overwrite").partitionBy(partition_col).parquet
+        spark, path, out.write.mode("overwrite").partitionBy(TS_BUCKET_COL).parquet
     )
     return {
         "files_before": before_files,
@@ -166,19 +181,16 @@ def count_data_files(path: str) -> int:
     return n
 
 
-def expire_partitions(
-    spark: SparkSession,
-    path: str,
-    cutoff_bucket: str,
-    partition_col: str = TS_BUCKET_COL,
-) -> list[str]:
-    """Delete partitions with bucket < cutoff_bucket (ISO prefixes compare
-    lexicographically). Directory-level: surviving partitions untouched.
-    Returns the deleted partition values; raises ``OSError`` when a
-    delete fails. Lists and deletes through the Hadoop FS."""
+def expire_partitions(spark: SparkSession, path: str, cutoff_bucket: str) -> list[str]:
+    """Delete hour-bucket partitions with bucket < cutoff_bucket (ISO
+    prefixes compare lexicographically). Directory-level: surviving
+    partitions untouched. Returns the deleted partition values; raises
+    ``OSError`` when a delete fails. Lists and deletes through the Hadoop
+    FS."""
+    recover_for_write(spark, path)
     deleted = []
     jvm, fs = _hadoop_fs(spark)
-    prefix = f"{partition_col}="
+    prefix = f"{TS_BUCKET_COL}="
     for status in fs.listStatus(jvm.org.apache.hadoop.fs.Path(path)):
         name = status.getPath().getName()
         if name.startswith(prefix) and name[len(prefix):] < cutoff_bucket:

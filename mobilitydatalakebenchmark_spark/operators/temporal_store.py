@@ -32,6 +32,7 @@ from ..functions.codecs import decode_direction, encode_direction
 from ..schemas import TEMPORAL_SCHEMA
 from .flat_store import explode_features, renest_documents
 from .maintenance import exists, recover_dir, replace_dir
+from .store import Store
 
 _MEASURES = {
     # temporal column -> (source column, value cast)
@@ -114,11 +115,10 @@ def as_of(seq: Column, ts: Column) -> Column:
     return F.when(F.size(prefix) > 0, F.element_at(prefix, -1)["value"])
 
 
-class TemporalStore:
+class TemporalStore(Store):
     """Per-entity sequence store with batch-append (recompute) semantics."""
 
-    def __init__(self, path: str):
-        self.path = path
+    schemas = {"": TEMPORAL_SCHEMA}
 
     def write(self, documents: DataFrame, mode: str = "overwrite") -> None:
         """Write the documents' sequences. ``mode="append"`` is W4/J9's
@@ -143,17 +143,11 @@ class TemporalStore:
         _merge(partials).write.mode(mode).parquet(self.path)
 
     def scan(self, spark: SparkSession) -> DataFrame:
-        recover_dir(spark, self.path)
-        return spark.read.schema(TEMPORAL_SCHEMA).parquet(self.path)
+        return self._read(spark)
 
     def append_batch(self, spark: SparkSession, documents: DataFrame) -> None:
         """``write(documents, mode="append")``, under the name perfbench calls."""
         self.write(documents, mode="append")
-
-    def total_size(self) -> int:
-        from ..sources.size import dir_size
-
-        return dir_size(self.path)
 
     def get_document(self, spark: SparkSession, timestamp: str) -> DataFrame:
         """Reconstruct the snapshot at an instant: timerange prune ->

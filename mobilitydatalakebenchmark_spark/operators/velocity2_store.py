@@ -25,13 +25,7 @@ from ..schemas import (
     VELOCITY2_VEHICLE_SCHEMA,
 )
 from .flat_store import at_snapshot, explode_features, renest_documents, write_bucketed
-from .maintenance import exists
-
-_SCHEMAS = {
-    "bus": VELOCITY2_BUS_SCHEMA,
-    "vehicle": VELOCITY2_VEHICLE_SCHEMA,
-    "obs": VELOCITY2_OBS_SCHEMA,
-}
+from .store import Store
 
 
 def build_velocity2_tables(
@@ -71,26 +65,21 @@ def build_velocity2_tables(
     return bus, vehicle, obs
 
 
-class Velocity2ParquetStore:
+class Velocity2ParquetStore(Store):
     """Two-level snowflake store (bus ⟵ vehicle ⟵ obs)."""
 
-    def __init__(self, path: str):
-        self.path = path
-
-    def _p(self, table: str) -> str:
-        return f"{self.path}/{table}"
-
-    def _read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.schema(_SCHEMAS[table]).parquet(self._p(table))
+    schemas = {
+        "bus": VELOCITY2_BUS_SCHEMA,
+        "vehicle": VELOCITY2_VEHICLE_SCHEMA,
+        "obs": VELOCITY2_OBS_SCHEMA,
+    }
 
     def write(self, documents: DataFrame, mode: str = "overwrite") -> None:
         bus, vehicle, obs = build_velocity2_tables(documents)
-        spark = documents.sparkSession
         for name, df_new, key in (("bus", bus, "bus_id"), ("vehicle", vehicle, "vehicle_id")):
-            if mode == "append" and exists(spark, self._p(name)):
+            if mode == "append":
                 # J7/J8: novelty anti-join per dim level
-                stored = self._read(spark, name).select(key)
-                df_new = df_new.join(stored, key, "left_anti")
+                df_new = self.novel(df_new, key, name)
             # both dims are bounded by the fleet: one part file per write
             df_new.coalesce(1).write.mode(mode).parquet(self._p(name))
         write_bucketed(obs, self._p("obs"), mode, entity="vehicle_id")
@@ -103,8 +92,3 @@ class Velocity2ParquetStore:
             .withColumn("id", F.col("vid"))
         )
         return renest_documents(flat)
-
-    def total_size(self) -> int:
-        from ..sources.size import dir_size
-
-        return dir_size(self.path)

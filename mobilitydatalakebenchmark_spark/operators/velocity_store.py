@@ -36,13 +36,7 @@ from ..schemas import (
     VELOCITY_MAIN_SCHEMA,
 )
 from .flat_store import at_snapshot, explode_features, renest_documents, write_bucketed
-from .maintenance import exists
-
-_SCHEMAS = {
-    "main": VELOCITY_MAIN_SCHEMA,
-    "l1": VELOCITY_L1_SCHEMA,
-    "l2": VELOCITY_L2_SCHEMA,
-}
+from .store import Store
 
 
 def _l1_key() -> F.Column:
@@ -99,25 +93,21 @@ def build_velocity_tables(
     return main, l1, l2
 
 
-class VelocityParquetStore:
+class VelocityParquetStore(Store):
     """3-table normalized store with incremental append semantics."""
 
-    def __init__(self, path: str):
-        self.path = path
-
-    def _p(self, table: str) -> str:
-        return f"{self.path}/{table}"
-
-    def _read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.schema(_SCHEMAS[table]).parquet(self._p(table))
+    schemas = {
+        "main": VELOCITY_MAIN_SCHEMA,
+        "l1": VELOCITY_L1_SCHEMA,
+        "l2": VELOCITY_L2_SCHEMA,
+    }
 
     def write(self, documents: DataFrame, mode: str = "overwrite") -> None:
         main, l1, l2 = build_velocity_tables(documents)
-        spark = documents.sparkSession
-        if mode == "append" and exists(spark, self._p("l1")):
+        if mode == "append":
             # J7/J8/F4: only novel dim rows are appended (existence probe
             # as left-anti join against the stored dim)
-            l1 = l1.join(self._read(spark, "l1").select("l1_id"), "l1_id", "left_anti")
+            l1 = self.novel(l1, "l1_id", "l1")
         # main and l1 are small by construction (see the scale posture):
         # one part file per write
         main.coalesce(1).write.mode(mode).parquet(self._p("main"))
@@ -139,8 +129,3 @@ class VelocityParquetStore:
             .withColumn("id", F.col("vid"))
         )
         return renest_documents(obs, snapshots=main.filter(F.col("timestamp") == timestamp))
-
-    def total_size(self) -> int:
-        from ..sources.size import dir_size
-
-        return dir_size(self.path)

@@ -29,7 +29,6 @@ from pyspark.sql.streaming import StreamingQuery
 from .run_identity import Txn, start_sink
 
 from ..operators.flat_store import FlatParquetStore, explode_features
-from ..operators.maintenance import exists
 from ..sources.geojson import snapshot_documents
 
 
@@ -60,27 +59,21 @@ def stream_to_flat_store(
     store = FlatParquetStore(table_path)
 
     def flush(batch: DataFrame, txn: Txn) -> None:
-        fresh = batch
-        if exists(batch.sparkSession, table_path):
-            # executor-side anti-join, never a driver timestamp list — a
-            # replayed availableNow backlog is the whole history
-            fresh = batch.join(store.scan().select("timestamp"), "timestamp", "left_anti")
-        store.write(fresh, mode="append")
+        # executor-side anti-join, never a driver timestamp list — a
+        # replayed availableNow backlog is the whole history
+        store.write(store.novel(batch, "timestamp"), mode="append")
 
     return start_sink(documents, checkpoint, flush)
 
 
-def windowed_vehicle_counts(documents: DataFrame, slide: str | None = None) -> DataFrame:
-    """Watermarked tumbling/sliding window over the stream: vehicles per
-    lineId per 5-minute window, tolerating 1 minute of late data. (The
-    late-data extension beyond reference parity.)"""
+def windowed_vehicle_counts(documents: DataFrame) -> DataFrame:
+    """Watermarked tumbling window over the stream: vehicles per lineId
+    per 5-minute window, tolerating 1 minute of late data. (The late-data
+    extension beyond reference parity.)"""
     flat = explode_features(documents).withColumn("ts", F.to_timestamp("timestamp"))
-    window = (
-        F.window("ts", "5 minutes", slide) if slide else F.window("ts", "5 minutes")
-    )
     return (
         flat.withWatermark("ts", "1 minute")
-        .groupBy(window.alias("win"), "lineId")
+        .groupBy(F.window("ts", "5 minutes").alias("win"), "lineId")
         .agg(
             F.approx_count_distinct("uuid").alias("n_vehicles"),
             F.count("*").alias("n_observations"),

@@ -1,5 +1,5 @@
-"""As-of join (both strategies agree + match brute force) and range join
-(broadcast vs bucketed agree)."""
+"""As-of join (matches brute force) and range join (broadcast vs bucketed
+agree)."""
 
 from __future__ import annotations
 
@@ -51,19 +51,6 @@ def test_union_strategy_matches_bruteforce(quotes_trades):
     assert len(got) == len(want)
     for k, v in want.items():
         assert got[k] == v or (v is not None and abs(got[k] - v) < 1e-12), k
-
-
-def test_pandas_strategy_agrees(quotes_trades):
-    quotes, trades = quotes_trades
-    a = {
-        (r.sym, r.trade_id): r.asof_price
-        for r in asof_join(trades, quotes, on="ts", by="sym").collect()
-    }
-    b = {
-        (r.sym, r.trade_id): r.asof_price
-        for r in asof_join(trades, quotes, on="ts", by="sym", strategy="pandas").collect()
-    }
-    assert a == b
 
 
 def test_multi_key_multi_value_asof(spark):

@@ -1,5 +1,7 @@
 """Compaction (fewer files, identical rows), retention expiry, and the
-crash safety of the one directory commit, ``replace_dir``."""
+crash safety of the one directory commit, ``replace_dir``: of a store
+that swaps itself (temporal), and of a flat store whose compaction
+crashed before the next append or read."""
 
 from __future__ import annotations
 
@@ -12,13 +14,22 @@ from pyspark.sql import functions as F
 
 from mobilitydatalakebenchmark_spark.functions.codecs import ts_bucket
 from mobilitydatalakebenchmark_spark.operators import maintenance
-from mobilitydatalakebenchmark_spark.operators.flat_store import explode_features
+from mobilitydatalakebenchmark_spark.operators.flat_store import (
+    FlatParquetStore,
+    explode_features,
+    renest_documents,
+)
 from mobilitydatalakebenchmark_spark.operators.maintenance import (
     compact_partitions,
     expire_partitions,
 )
 from mobilitydatalakebenchmark_spark.operators.temporal_store import TemporalStore
 from mobilitydatalakebenchmark_spark.schemas import TS_BUCKET_COL
+from mobilitydatalakebenchmark_spark.sources.geojson import write_snapshot_dir
+from mobilitydatalakebenchmark_spark.streaming.ingest import (
+    read_snapshot_stream,
+    stream_to_flat_store,
+)
 
 
 def _fragmented_table(spark, documents_df, path):
@@ -122,7 +133,6 @@ def test_compaction_with_zorder_clusters_files(spark, tmp_path):
     compact_partitions(
         spark,
         path,
-        partition_col="ts_bucket",
         target_file_bytes=16 * 1024,
         zorder=("lon", "lat", (4.25, 4.45), (50.79, 50.91)),
     )
@@ -252,3 +262,76 @@ def test_replace_dir_survives_a_crash_at_every_step(
     # nothing left beside or inside the store
     assert os.listdir(tmp_path) == ["t"]
     assert not [e for e in os.scandir(tmp_path / "t") if e.is_dir()]
+
+
+def _crash_compaction(spark, path, fault):
+    """``compact_partitions(path)`` with the swap's FS call of ``fault``
+    failing."""
+    (op, nth, mode), _state = _FAULTS[fault]
+    jvm, fs = maintenance._hadoop_fs(spark)
+    faulty = _FaultyFS(fs, op, nth, mode)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(maintenance, "_hadoop_fs", lambda _spark: (jvm, faulty))
+        with pytest.raises(OSError if mode == "false" else _Crash):
+            compact_partitions(spark, path)
+
+
+@pytest.fixture(params=list(_FAULTS))
+def crashed_flat(spark, tmp_path, documents_df, snapshots, request):
+    """A flat store of two writes whose compaction crashed at each swap
+    step. Compaction keeps the rows, so the old and the compacted state
+    hold the same snapshots."""
+    store = FlatParquetStore(str(tmp_path / "flat"))
+    store.write(_docs(documents_df, _OLD, snapshots))
+    store.write(_docs(documents_df, _BATCH, snapshots), mode="append")
+    _crash_compaction(spark, store.path, request.param)
+    return store
+
+
+def _stored(store) -> dict[str, list[str]]:
+    """Every snapshot the flat store holds -> its sorted uuids."""
+    rows = renest_documents(store.scan()).collect()
+    return {
+        r["timestamp"]: sorted(f["properties"]["uuid"] for f in r["data"]["features"])
+        for r in rows
+    }
+
+
+def _generated(snapshots, indices) -> dict[str, list[str]]:
+    return {
+        snapshots[i][0]: sorted(f["properties"]["uuid"] for f in snapshots[i][1]["features"])
+        for i in indices
+    }
+
+
+def _leftovers(root) -> list[str]:
+    return [n for n in os.listdir(root) if n.endswith(("__pending", "__replaced"))]
+
+
+def test_read_after_crashed_compaction(crashed_flat, snapshots):
+    """A read finishes a cut-short swap: it sees the old or the compacted
+    table, never a missing one."""
+    assert _stored(crashed_flat) == _generated(snapshots, _OLD + _BATCH)
+
+
+def test_append_after_crashed_compaction(tmp_path, crashed_flat, documents_df, snapshots):
+    """An append recovers the table before it writes, so it lands beside
+    the stored snapshots instead of in a new table the next recovery
+    would keep; and it drops a rewrite that never swapped in."""
+    crashed_flat.write(_docs(documents_df, _NEXT, snapshots), mode="append")
+    assert _stored(crashed_flat) == _generated(snapshots, _OLD + _BATCH + _NEXT)
+    assert _leftovers(tmp_path) == []
+
+
+def test_stream_batch_after_crashed_compaction(spark, tmp_path, crashed_flat, snapshots):
+    """A streamed batch replaying one stored snapshot and bringing one
+    new one: the novelty anti-join sees the recovered table, so the
+    replay adds nothing and the new snapshot lands beside the old ones."""
+    source = str(tmp_path / "source")
+    write_snapshot_dir([snapshots[i] for i in _BATCH[-1:] + _NEXT], source)
+    query = stream_to_flat_store(
+        read_snapshot_stream(spark, source), crashed_flat.path, str(tmp_path / "ckpt")
+    )
+    assert query.awaitTermination(120)
+    assert _stored(crashed_flat) == _generated(snapshots, _OLD + _BATCH + _NEXT)
+    assert _leftovers(tmp_path) == []

@@ -16,7 +16,10 @@ from mobilitydatalakebenchmark_spark.operators.encoded_store import (
     CantorParquetStore,
     VelocitySplitParquetStore,
 )
-from mobilitydatalakebenchmark_spark.operators.flat_store import FlatParquetStore
+from mobilitydatalakebenchmark_spark.operators.flat_store import (
+    FlatParquetStore,
+    explode_features,
+)
 from mobilitydatalakebenchmark_spark.operators.temporal_store import TemporalStore
 from mobilitydatalakebenchmark_spark.operators.velocity2_store import Velocity2ParquetStore
 from mobilitydatalakebenchmark_spark.operators.velocity_store import VelocityParquetStore
@@ -153,6 +156,27 @@ def test_one_sorted_file_per_bucket(tmp_path, documents_df, snapshots, name):
             rows = pq.read_table(added.pop(), columns=[entity, "timestamp"]).to_pylist()
             keys = [(r[entity], r["timestamp"]) for r in rows]
             assert keys == sorted(keys), (mode, bucket)
+
+
+def test_big_bucket_splits_into_sorted_files(spark, tmp_path, documents_df):
+    """A bucket past Spark's advisory partition size is written by more
+    than one task, each file still sorted, and the rows are unchanged."""
+    store = FlatParquetStore(str(tmp_path / "flat"))
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    spark.conf.set(key, "16k")
+    try:
+        store.write(documents_df)
+    finally:
+        spark.conf.unset(key)
+    files = _bucket_files(store.path)
+    assert max(map(len, files.values())) > 1, files
+    for path in set().union(*files.values()):
+        rows = pq.read_table(path, columns=["uuid", "timestamp"]).to_pylist()
+        keys = [(r["uuid"], r["timestamp"]) for r in rows]
+        assert keys == sorted(keys), path
+    want = explode_features(documents_df)
+    got = store.scan().select(*want.columns)
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
 
 
 def test_velocity_split_write_jobs(spark, tmp_path, batches):
