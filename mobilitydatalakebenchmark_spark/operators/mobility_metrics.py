@@ -27,15 +27,11 @@ def cell_visits(
     """(entity, cell, n_visits): observations bucketed into a lat/lon grid
     and counted — the shared input of entropy and frequent-location
     detection. One shuffle on (entity, cell)."""
-    return (
-        df.select(
-            F.col(id_col),
-            F.floor(F.col(lat_col) / cell_lat_deg).cast("long").alias("cx"),
-            F.floor(F.col(lon_col) / cell_lon_deg).cast("long").alias("cy"),
-        )
-        .groupBy(id_col, "cx", "cy")
-        .agg(F.count("*").alias("n_visits"))
-    )
+    return df.groupBy(
+        F.col(id_col),
+        F.floor(F.col(lat_col) / cell_lat_deg).cast("long").alias("cx"),
+        F.floor(F.col(lon_col) / cell_lon_deg).cast("long").alias("cy"),
+    ).agg(F.count("*").alias("n_visits"))
 
 
 def location_entropy(

@@ -93,22 +93,16 @@ def trip_segments(
         new_trip == 0, F.round(F.col("step_m") * 100).cast("long")
     ).otherwise(F.lit(None).cast("long"))
     in_trip_dt = F.when(new_trip == 0, F.col("dt_s")).otherwise(F.lit(None))
-    cm = F.coalesce(F.sum("_cm"), F.lit(0).cast("long"))
-    return (
-        trips.withColumn("_cm", in_trip_cm)
-        .withColumn("_dt", in_trip_dt)
-        .groupBy(id_col, "trip_id")
-        .agg(
-            F.min(ts_col).alias("trip_start"),
-            F.max(ts_col).alias("trip_end"),
-            F.count("*").alias("n_fixes"),
-            F.round(cm / 100.0, 2).alias("total_m"),
-            F.round(
-                (cm / 100.0)
-                / F.nullif(F.sum("_dt").cast("double"), F.lit(0.0)),
-                4,
-            ).alias("mean_speed_mps"),
-        )
+    cm = F.coalesce(F.sum(in_trip_cm), F.lit(0).cast("long"))
+    return trips.groupBy(id_col, "trip_id").agg(
+        F.min(ts_col).alias("trip_start"),
+        F.max(ts_col).alias("trip_end"),
+        F.count("*").alias("n_fixes"),
+        F.round(cm / 100.0, 2).alias("total_m"),
+        F.round(
+            (cm / 100.0) / F.nullif(F.sum(in_trip_dt).cast("double"), F.lit(0.0)),
+            4,
+        ).alias("mean_speed_mps"),
     )
 
 
@@ -125,14 +119,14 @@ def detect_stops(
     least `min_duration_s`. Run grouping via the rank-difference trick
     (two windows over the same vehicle partition — one shuffle)."""
     stepped = step_metrics(df, id_col, ts_col, lon_col, lat_col)
-    slow = stepped.withColumn(
-        "is_slow",
-        (F.col("speed_mps") < speed_thresh_mps) & F.col("speed_mps").isNotNull(),
-    )
+    is_slow = (F.col("speed_mps") < speed_thresh_mps) & F.col("speed_mps").isNotNull()
     w = Window.partitionBy(id_col).orderBy(ts_col)
-    w_slow = Window.partitionBy(id_col, "is_slow").orderBy(ts_col)
-    runs = slow.withColumn(
-        "run_key", F.row_number().over(w) - F.row_number().over(w_slow)
+    w_slow = Window.partitionBy(id_col, is_slow).orderBy(ts_col)
+    runs = stepped.withColumns(
+        {
+            "is_slow": is_slow,
+            "run_key": F.row_number().over(w) - F.row_number().over(w_slow),
+        }
     )
     return (
         runs.filter(F.col("is_slow"))
@@ -332,25 +326,21 @@ def co_location_pairs(
             f"unix_micros(cast({ts_col} as timestamp)) div {window_s * 1_000_000}"
         ).alias("_tb"),
     )
-    neighbors = F.array(
-        *[
-            F.struct(
-                (F.col("_cx") + dx).alias("cx"),
-                (F.col("_cy") + dy).alias("cy"),
-                (F.col("_tb") + dt).alias("tb"),
-            )
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-            for dt in (-1, 0, 1)
-        ]
+    # the 27 neighbour keys as one SQL expression: one call to build, where
+    # a Column per field costs a JVM round trip each
+    neighbors = ", ".join(
+        f"named_struct('cx', _cx + {dx}, 'cy', _cy + {dy}, 'tb', _tb + {dt})"
+        for dx in (-1, 0, 1)
+        for dy in (-1, 0, 1)
+        for dt in (-1, 0, 1)
     )
     a = pts.select(
         F.col(id_col).alias("id_a"),
         F.col(lat_col).alias("lat_a"),
         F.col(lon_col).alias("lon_a"),
         F.col("_tus").alias("tus_a"),
-        F.explode(neighbors).alias("_cell"),
-    ).select("id_a", "lat_a", "lon_a", "tus_a", "_cell.cx", "_cell.cy", "_cell.tb")
+        F.expr(f"inline(array({neighbors}))"),
+    )
     b = pts.select(
         F.col(id_col).alias("id_b"),
         F.col(lat_col).alias("lat_b"),
@@ -363,18 +353,14 @@ def co_location_pairs(
     dist = F.round(
         haversine_m(F.col("lat_a"), F.col("lon_a"), F.col("lat_b"), F.col("lon_b")), 2
     )
-    contacts = (
-        a.join(b, ["cx", "cy", "tb"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            F.abs(F.col("tus_a") - F.col("tus_b")) <= F.lit(window_s * 1_000_000)
-        )
-        .withColumn("dist_m", dist)
-        .filter(F.col("dist_m") <= radius_m)
+    contacts = a.join(b, ["cx", "cy", "tb"]).filter(
+        (F.col("id_a") < F.col("id_b"))
+        & (F.abs(F.col("tus_a") - F.col("tus_b")) <= F.lit(window_s * 1_000_000))
+        & (dist <= radius_m)
     )
     return contacts.groupBy("id_a", "id_b").agg(
         F.count("*").alias("n_contacts"),
-        F.min("dist_m").alias("min_dist_m"),
+        F.min(dist).alias("min_dist_m"),
     )
 
 
@@ -414,13 +400,9 @@ def od_matrix(
         .agg(F.min(endpoint).alias("_o"), F.max(endpoint).alias("_d"))
     )
     cell = lambda c, size: F.floor(c / size).cast("long")  # noqa: E731
-    return (
-        trips.select(
-            cell(F.col(f"_o.{lat_col}"), cell_lat_deg).alias("o_cx"),
-            cell(F.col(f"_o.{lon_col}"), cell_lon_deg).alias("o_cy"),
-            cell(F.col(f"_d.{lat_col}"), cell_lat_deg).alias("d_cx"),
-            cell(F.col(f"_d.{lon_col}"), cell_lon_deg).alias("d_cy"),
-        )
-        .groupBy("o_cx", "o_cy", "d_cx", "d_cy")
-        .agg(F.count("*").alias("n_trips"))
-    )
+    return trips.groupBy(
+        cell(F.col(f"_o.{lat_col}"), cell_lat_deg).alias("o_cx"),
+        cell(F.col(f"_o.{lon_col}"), cell_lon_deg).alias("o_cy"),
+        cell(F.col(f"_d.{lat_col}"), cell_lat_deg).alias("d_cx"),
+        cell(F.col(f"_d.{lon_col}"), cell_lon_deg).alias("d_cy"),
+    ).agg(F.count("*").alias("n_trips"))

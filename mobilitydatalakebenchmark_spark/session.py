@@ -39,13 +39,30 @@ so the same logical plans scale to a multi-executor cluster:
   passes spend 6.5-8.6 s recompiling them instead of about 1 s. The flag
   goes in ``spark.driver.defaultJavaOptions``, which Spark puts in front of
   ``spark.driver.extraJavaOptions``, so a caller's own JVM options keep it.
+- No per-call Python origin capture
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  PySpark wraps every Column, function and DataFrame call in an active-
+  session lookup, a JVM class lookup, a conf read, a Python stack walk and
+  a set and clear of the JVM's current origin. A warm perfbench
+  ``lake_scan`` pass (``local[4]``, seed 7) sent about 15,000 py4j
+  commands with it on, and building the pass's 16 queries took a third of
+  its machine CPU (5.2-5.5 s of 15.4-16.8 s); with it off, and with
+  ``read_table``'s schema memo, 6,500 commands and 2.9-3.4 s. What is
+  lost is the Python file and line in the DataFrame query context of a
+  runtime error; the error still raises with its error class and message,
+  and the Python traceback still shows the caller. To debug with it on,
+  pass ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+  "true"}``.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark.errors import utils as pyspark_errors_utils
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
@@ -91,11 +108,16 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.hadoop.parquet.writer.version", "v2")
         .config("spark.driver.defaultJavaOptions", "-XX:ReservedCodeCacheSize=256m")
+        # no per-call Python origin capture (see the module doc)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # PySpark reads the origin-capture conf once per process, on the first
+    # wrapped call, and caches it; forget that so this session's conf holds
+    pyspark_errors_utils._enable_debugging_cache = None
     return spark
 
 
@@ -126,11 +148,39 @@ def local_df(spark: SparkSession, rows: list, schema: str):
     return spark.createDataFrame(pdf, schema)
 
 
+# (path, its files' names, sizes and mtimes, nanosAsLong) -> inferred schema
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _file_version(path: str) -> tuple | None:
+    """(name, size, mtime_ns) of every file at a local ``path``, one file or
+    a directory tree; None when ``path`` is not a local file or directory
+    (it is then read without the schema memo)."""
+    try:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return ((path, st.st_size, st.st_mtime_ns),)
+        if not os.path.isdir(path):
+            return None
+        files = sorted(os.path.join(root, f) for root, _, names in os.walk(path) for f in names)
+        stats = [os.stat(f) for f in files]
+        return tuple((f, st.st_size, st.st_mtime_ns) for f, st in zip(files, stats))
+    except OSError:
+        return None
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str, heavy: bool = False):
     """Read one driver test table with the engine's normalizations applied
     (events.parquet stores TIMESTAMP(NANOS): read nanos-as-long — runtime-
     settable, so an externally-built session works — and rebuild micros via
     integer division).
+
+    The schema is inferred once per file version. Parquet schema inference
+    is a Spark job (a footer read), about 150 ms of CPU for an sf0.001
+    table; the inferred schema is kept on the driver, keyed on the path,
+    the name, size and mtime of each of its files, and nanosAsLong, and
+    later reads pass it to ``spark.read.schema``, which runs no job. A
+    rewritten file has a new size or mtime, so it is inferred again.
 
     Small-file parallelism rescue (``heavy=True``): the driver's test
     tables are single row-group files, so the scan is one task regardless
@@ -144,38 +194,38 @@ def read_table(spark: SparkSession, sf_dir: str, name: str, heavy: bool = False)
     more than the single-task scan it rescues (measured +20-35% on the
     sf0.1 text gates in round 3). At production scale (multi-row-group /
     multi-file tables over the size cutoff) the branch never triggers."""
-    import os as _os
-
-    from pyspark.sql import functions as F
-
+    nanos_conf = "spark.sql.legacy.parquet.nanosAsLong"
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.conf.set(nanos_conf, "true")
+        nanos_as_long = "true"
+    else:
+        nanos_as_long = spark.conf.get(nanos_conf, "false")
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    version = _file_version(path)
+    key = (path, version, nanos_as_long)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        schema = df.schema
+        if version is not None:
+            _SCHEMAS[key] = schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
     # Newer driver generations store ts as TIMESTAMP(isAdjustedToUTC=false),
     # which Spark 4 reads as TIMESTAMP_NTZ — a type that supports neither
     # cast("long") nor unix_micros(). The session timezone is pinned UTC, so
     # casting NTZ -> TIMESTAMP preserves every value bit-for-bit and keeps
     # DuckDB-oracle parity. Applied to any NTZ column so all tables and both
     # data generations (nanos-as-bigint and NTZ-micros) read identically.
-    ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]
-    for c in ntz_cols:
-        df = df.withColumn(c, F.col(c).cast("timestamp"))
-    if heavy:
-        try:
-            size = (
-                _os.path.getsize(path)
-                if _os.path.isfile(path)
-                else sum(
-                    _os.path.getsize(_os.path.join(root, f))
-                    for root, _, files in _os.walk(path)
-                    for f in files
-                )
-            )
-        except OSError:
-            size = _SMALL_SCAN_BYTES
-        if size < _SMALL_SCAN_BYTES:
-            df = df.repartition(spark.sparkContext.defaultParallelism)
+    fixes = {}
+    for field in schema.fields:
+        dtype = field.dataType.simpleString()
+        if name == "events" and field.name == "ts" and dtype == "bigint":
+            fixes["ts"] = F.expr("timestamp_micros(ts div 1000)")
+        elif dtype == "timestamp_ntz":
+            fixes[field.name] = F.col(field.name).cast("timestamp")
+    if fixes:
+        df = df.withColumns(fixes)
+    if heavy and sum(size for _, size, _ in version or ()) < _SMALL_SCAN_BYTES:
+        df = df.repartition(spark.sparkContext.defaultParallelism)
     return df

@@ -2,9 +2,13 @@
 
 from __future__ import annotations
 
+import gc
 import glob
 
 import pytest
+from pyspark.errors import PySparkException
+from pyspark.errors import utils as pyspark_errors_utils
+from pyspark.sql import functions as F
 
 from mobilitydatalakebenchmark_spark.operators.document_store import DocumentParquetStore
 from mobilitydatalakebenchmark_spark.operators.flat_store import FlatParquetStore
@@ -48,6 +52,54 @@ def test_codegen_cache_holds_the_gates_working_set(spark):
     run_gates()
     assert _compiles(spark) - before == 0
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1024"
+
+
+def test_origin_capture_is_off_and_errors_keep_their_class(spark):
+    """PySpark does not capture the Python call site of every Column and
+    DataFrame call; a runtime error still raises with its error class."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert pyspark_errors_utils.is_debugging_enabled() is False
+    with pytest.raises(PySparkException) as err:
+        spark.range(1).select(F.lit("x").cast("int")).collect()
+    assert err.value.getCondition() == "CAST_INVALID_INPUT"
+
+
+def _build_commands(spark, build) -> int:
+    """py4j commands the gateway client sends while ``build`` runs."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = 0
+
+    def counted(*args, **kwargs):
+        nonlocal sent
+        sent += 1
+        return send(*args, **kwargs)
+
+    gc.collect()  # no finalizer of an older Java object lands in the count
+    client.send_command = counted
+    try:
+        build()
+    finally:
+        del client.send_command
+    return sent
+
+
+def test_gate_builds_stay_within_a_py4j_budget(spark):
+    """Building, not running, the eight gates, once each table's schema is
+    known, stays within a budget of py4j commands. Measured on sf0.001:
+    10,117 with PySpark's per-call origin capture on and a schema inference
+    per ``read_table``, 3,040-3,053 with both gone; the budget is 1.5 times
+    that, so a return of either fails here."""
+    budget = 4500
+    registry = load_registry()
+
+    def build():
+        for name in GATES:
+            registry[name].spark(spark, SF_SMOKE)
+
+    build()
+    sent = _build_commands(spark, build)
+    assert sent <= budget, sent
 
 
 def test_driver_jvm_reserves_a_256mb_code_cache(spark):

@@ -208,3 +208,21 @@ def test_small_tables_one_file_per_write(tmp_path, batches, name):
         for t in tables:
             added = set(glob.glob(f"{store.path}/{t}/*.parquet")) - before[t]
             assert len(added) <= 1, (mode, t, sorted(added))
+
+
+def test_read_table_infers_each_file_version_once(spark, tmp_path):
+    """A second read of an unchanged driver table runs no Spark job: its
+    inferred schema is kept. A rewritten file, here with one column more,
+    is inferred again, so a kept schema never outlives its file."""
+    import pyarrow as pa
+
+    from mobilitydatalakebenchmark_spark.session import read_table
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"k": [1, 2], "v": ["a", "b"]}), path)
+    read_table(spark, str(tmp_path), "t")
+    assert _jobs(spark, lambda: read_table(spark, str(tmp_path), "t")) == 0
+    pq.write_table(pa.table({"k": [3], "v": ["c"], "w": [0.5]}), path)
+    df = read_table(spark, str(tmp_path), "t")
+    assert df.columns == ["k", "v", "w"]
+    assert [tuple(r) for r in df.collect()] == [(3, "c", 0.5)]
